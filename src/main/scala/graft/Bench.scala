@@ -1,6 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
+
+import graft.StageRecorder.RowProfile
 
 /** Benchmark main — driver runs this per round against
   * SPARK_GRAFT_SF_DIR (default sf0.1) and records the one-line JSON.
@@ -47,6 +51,19 @@ object Bench {
     * reach. */
   private[graft] def tripRatioFor(histPrev: Double): Double =
     if (histPrev >= 10.0) 1.4 else 3.0
+
+  /** One timed repeat of row `name`, recorded as a [[StageRecorder]]
+    * unit: the clock covers `body` only, the record every job `body`
+    * ran. A throwing `body` comes back as `Left` with its record closed. */
+  private[graft] def timedRepeat(recorder: StageRecorder, spark: SparkSession,
+      name: String)(body: => Unit): (Double, Either[Throwable, Unit], RowProfile) = {
+    var sec = 0.0
+    val (out, profile) = recorder.record(spark.sparkContext, name) {
+      val t0 = System.nanoTime()
+      try body finally sec = (System.nanoTime() - t0) / 1e9
+    }
+    (sec, out, profile)
+  }
 
   def main(args: Array[String]): Unit = {
     // local profiling knobs (driver passes no args): args(0) = comma-
@@ -363,32 +380,7 @@ object Bench {
       try {
         val path = sys.env.getOrElse("SPARK_GRAFT_HISTORY",
           "/root/repo/tools/bench_history.json")
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path)), "UTF-8")
-        // the SF key must be a KEY (next non-space char is ':'), not an
-        // SF name quoted inside a string field like "source"
-        val start = Iterator.iterate(txt.indexOf("\"" + sfName + "\""))(
-            i => txt.indexOf("\"" + sfName + "\"", i + 1))
-          .takeWhile(_ >= 0)
-          .find { i =>
-            val after = txt.drop(i + sfName.length + 2).dropWhile(_.isWhitespace)
-            after.startsWith(":")
-          }.getOrElse(-1)
-        if (start < 0) Map.empty
-        else {
-          // brace-DEPTH scan, not first-'}': a nested object inside the
-          // per-SF map would otherwise truncate the entries silently
-          val open = txt.indexOf('{', start)
-          var depth = 0
-          var close = open
-          while (close < txt.length &&
-              { val c = txt.charAt(close)
-                if (c == '{') depth += 1 else if (c == '}') depth -= 1
-                depth != 0 }) close += 1
-          "\"([a-z0-9_]+)\"\\s*:\\s*([0-9.eE+-]+)".r
-            .findAllMatchIn(txt.substring(open + 1, close))
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
+        Json.numbers(Json.readFile(path).get(sfName))
       } catch { case _: Throwable => Map.empty }
     // a guard that silently disables itself contradicts the repo's
     // self-announcing-guard rule: an empty history map means the
@@ -489,6 +481,9 @@ object Bench {
       }
     }
 
+    // the layer record of each row's reported repeat, for the full record
+    val recorder = new StageRecorder().register(spark)
+    val profiles = scala.collection.mutable.LinkedHashMap[String, RowProfile]()
     val results = (SparkEntry.queries ++ extraQueries).toSeq.sortBy(_._1)
       .filter(q => matches(q._1))
       .map { case (name, entryFn) =>
@@ -521,23 +516,27 @@ object Bench {
       val rowStartNs = System.nanoTime()
       while (rep < planned) {
         rep += 1
-        val t0 = System.nanoTime()
-        ok = try { fn(spark, sfDir).count(); ok }
-          catch {
-            // a DESIGNED refusal (e.g. the exact all-pairs form past
-            // its row cap, whose scale path is a separate query) is not
-            // an error — report it distinctly so a genuine failure of
-            // the same query can never hide behind the skip sentinel
-            case _: graft.model.DesignedSkip => skipped = true; ok
-            case _: Throwable => false
-          }
+        val (t, outcome, profile) =
+          timedRepeat(recorder, spark, name)(fn(spark, sfDir).count())
+        ok = outcome match {
+          case Right(_) => ok
+          // a DESIGNED refusal (e.g. the exact all-pairs form past
+          // its row cap, whose scale path is a separate query) is not
+          // an error — report it distinctly so a genuine failure of
+          // the same query can never hide behind the skip sentinel
+          case Left(_: graft.model.DesignedSkip) => skipped = true; ok
+          case Left(_) => false
+        }
         // min over repeats: the steady-state cost, robust to one-off
         // JIT/page-cache/GC interference in either direction — except
         // construction-memoized queries, which report the first (cold)
-        // repeat so the memoized work can't vanish from the number
-        val t = (System.nanoTime() - t0) / 1e9
-        if (heavyConstruction(name)) { if (rep == 1) sec = t }
-        else sec = math.min(sec, t)
+        // repeat so the memoized work can't vanish from the number.
+        // The row's profile is the reported repeat's.
+        val reported = if (heavyConstruction(name)) rep == 1 else t < sec
+        if (reported) {
+          sec = t
+          profiles(name) = profile
+        }
         // Fast rows are timer-noise-dominated at big SFs: one
         // descheduled task flips a sub-second query's sweep ratio
         // (r11's rollup_returns recorded 16.4× at sf10 against 3.3× on
@@ -551,8 +550,7 @@ object Bench {
             !heavyConstruction(name) && ok && !skipped && sec < 3.0)
           planned = 3
         if (repeats > 1) {
-          System.err.println(
-            f"[bench] $name ${(System.nanoTime() - t0) / 1e9}%.3f s")
+          System.err.println(f"[bench] $name $t%.3f s")
           spark.catalog.clearCache()
           spark.sparkContext.getPersistentRDDs.values
             .foreach(_.unpersist(blocking = false))
@@ -627,6 +625,7 @@ object Bench {
         rowStealFrac)
     }
     val sweepWallSec = (System.nanoTime() - sweepStartNs) / 1e9
+    recorder.unregister(spark)
     val loadAfter = loadavg1()
     val jvmsAfter = otherJvmCpuTicks()
     val (stealAfter, iowaitAfter) = hostStealIo()
@@ -741,11 +740,8 @@ object Bench {
       try {
         val path = sys.env.getOrElse("SPARK_GRAFT_PREV_QUERIES",
           "/root/repo/tools/bench_prev_queries.json")
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path)), "UTF-8")
-        "\"([a-z0-9_]+)\"".r.findAllMatchIn(
-          txt.substring(txt.indexOf("queries")))
-          .map(_.group(1)).toSet
+        Json.readFile(path).get("queries").elements().asScala
+          .map(_.asText).toSet
       } catch { case _: Throwable => Set.empty }
     val comparable = measured.filter(r => prevQueries(r._1))
     val comparableTotal = comparable.map(_._2).sum
@@ -813,6 +809,7 @@ object Bench {
         s""""history_trips":$historyTripsJson,""" +
         s""""coload":$coloadJson,""" +
         s""""recall":$recallJson,"recall_structured":$structuredJson,""" +
+        s""""profile":${Json.mapper.writeValueAsString(profiles)},""" +
         s"""$comparableJson,"sf":${q(sfDir)}}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
       (full + "\n").getBytes("UTF-8"))
@@ -863,8 +860,9 @@ object Bench {
         (if (withRecall) s""""recall":$recallJson,""" else "") +
         s"""$comparableJson,""" +
         s""""full":${q(fullPath)},"sf":${q(sfDir)}}"""
-    val summary = Seq(summaryLine(true, true), summaryLine(false, true),
-      summaryLine(false, false)).find(_.length <= 1900)
+    // the first variant that fits, built lazily; the leanest otherwise
+    val summary = Iterator((true, true), (false, true))
+      .map { case (r, w) => summaryLine(r, w) }.find(_.length <= 1900)
       .getOrElse(summaryLine(false, false))
     if (summary.length > 1900)
       System.err.println(s"[bench] WARNING: summary line is " +

@@ -100,26 +100,11 @@ object StreamGuard {
     m
   }
 
-  /** Parse ONLY the "rates" object (brace-depth scan, the batch
-    * guard's per-SF parser shape) — a whole-file regex would turn any
-    * numeric metadata field ("round": 17) into a phantom leg entry in
-    * the tripwire map. */
-  private[graft] def parseRates(txt: String): Map[String, Double] = {
-    val keyAt = txt.indexOf("\"rates\"")
-    val open = if (keyAt < 0) -1 else txt.indexOf('{', keyAt)
-    if (open < 0) Map.empty[String, Double]
-    else {
-      var depth = 0
-      var close = open
-      while (close < txt.length &&
-          { val c = txt.charAt(close)
-            if (c == '{') depth += 1 else if (c == '}') depth -= 1
-            depth != 0 }) close += 1
-      "\"([a-z0-9_]+)\"\\s*:\\s*([0-9.eE+-]+)".r
-        .findAllMatchIn(txt.substring(open + 1, close))
-        .map(mm => mm.group(1) -> mm.group(2).toDouble).toMap
-    }
-  }
+  /** The "rates" object's numeric fields, nothing else: a numeric
+    * metadata field elsewhere in the file ("round": 17) must not
+    * become a phantom leg entry in the tripwire map. */
+  private[graft] def parseRates(txt: String): Map[String, Double] =
+    Json.numbers(Json.mapper.readTree(txt).get("rates"))
 
   // the FIRST probe against a fresh SparkContext reads cold (JIT +
   // first-touch of the sort path — measured 3.8 s vs 0.5-0.8 s steady

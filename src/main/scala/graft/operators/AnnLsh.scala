@@ -212,11 +212,8 @@ object AnnLsh {
       s"neardup-$threshold-$tables-$width") {
       val out = Tables.scratchDir(s, dir, "embeddings",
         s"neardup-$threshold-$tables-$width")
-      val t0 = System.nanoTime()
       computeNearDupLsh(s, dir, threshold, tables, width)
         .write.mode("overwrite").parquet(out)
-      System.err.println(
-        f"[graft] neardup pairs build+write: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       out
     }
     s.read.parquet(path).orderBy(col("id1"), col("id2"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{StageRecorder, Tables}
 import graft.functions.GraftFunctions.tokens
 import graft.functions.HashExpressions.{minhashSig, shingleHashes, simhash64}
 
@@ -109,11 +109,11 @@ object DedupQueries {
     verifyJaccard(ngramCandidates(s, dir), docShingleArrays(s, dir), 0.7)
       .orderBy(col("id1"), col("id2"))
 
-  /** Candidate (id1, id2) pairs of [[ngramJaccard]] — exposed for
-    * stage profiling ([[graft.tools.ProfileNgram]]). Exactness: every
+  /** Candidate (id1, id2) pairs of [[ngramJaccard]] (plan audit:
+    * plans/r18/dedup_ngram_jaccard_sf10_audit.txt). Exactness: every
     * pruning rule below only DISCARDS pairs the exact verification
     * would discard anyway; every true J ≥ 0.7 pair survives. */
-  private[graft] def ngramCandidates(s: SparkSession, dir: String)
+  private def ngramCandidates(s: SparkSession, dir: String)
       : DataFrame = {
     val docs = docShingleArrays(s, dir)
     // prefix = first n − ⌈t·n⌉ + 1 hashes of the doc's canonically
@@ -208,10 +208,11 @@ object DedupQueries {
     * Each signature slot is an `array_min` over the doc's hash array —
     * computed NARROWLY per document row, no (doc, shingle) explosion
     * and no aggregation shuffle at all. */
-  /** (doc_id, band, bucket) LSH band-bucket rows of [[minhashLsh]] —
-    * extracted so [[graft.tools.ProfileDedupSkew]] can measure bucket
-    * population skew on exactly the production construction. */
-  private[graft] def minhashBuckets(docs: DataFrame): DataFrame = {
+  /** (doc_id, band, bucket) LSH band-bucket rows of [[minhashLsh]].
+    * Bucket population skew on this construction was audited at
+    * sf0.1/1/10 (plans/r18/dedup_skew_counts.txt, OPTIMIZATION_r18.md):
+    * no hot key. */
+  private def minhashBuckets(docs: DataFrame): DataFrame = {
     val numHashes = 16
     val rowsPerBand = 4
     // shingle-less docs have no hashes to min over (the oracle's
@@ -364,15 +365,6 @@ object DedupQueries {
     }
   }
 
-  /** Dev hook for tools.ProfileClusters — the raw pair set. */
-  private[graft] def simhashPairsForProfile(s: SparkSession,
-      dir: String): DataFrame =
-    hammingPairs(s, dir).select(col("id1"), col("id2"))
-
-  /** Dev hook for tools.ProfileClusters — the signature stage alone. */
-  private[graft] def sigForProfile(s: SparkSession, dir: String): DataFrame =
-    sig64(s, dir)
-
   /** Materialized hamming≤3 pair set, shared by dedup_simhash_pairs
     * and the CC family (dedup_clusters / pipeline_keep /
     * pipeline_keep_best): like the CC label table, the band join is
@@ -383,10 +375,7 @@ object DedupQueries {
     val path = Tables.memoizedAtConstruction(s, dir, "documents",
       "simhash-pairs") {
       val out = Tables.scratchDir(s, dir, "documents", "pairs")
-      val t0 = System.nanoTime()
       computeHammingPairs(s, dir).write.mode("overwrite").parquet(out)
-      System.err.println(
-        f"[graft] simhash pairs build+write: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       out
     }
     s.read.parquet(path)
@@ -477,11 +466,7 @@ object DedupQueries {
     // the documents.parquet mtime so regenerated data recomputes.
     val path = Tables.memoizedAtConstruction(s, dir, "documents", "simhash-cc") {
       val out = Tables.scratchDir(s, dir, "documents", "cc")
-      val df = computeSimhashClusters(s, dir)
-      val tw = System.nanoTime()
-      df.write.mode("overwrite").parquet(out)
-      System.err.println(
-        f"[graft] cc label write: ${(System.nanoTime() - tw) / 1e9}%.2f s")
+      computeSimhashClusters(s, dir).write.mode("overwrite").parquet(out)
       out
     }
     s.read.parquet(path).orderBy(col("doc_id"))
@@ -492,27 +477,18 @@ object DedupQueries {
     // trivially its own representative and joins back in at the end.
     // At corpus scale the near-dup subgraph is a small fraction of the
     // table, so neither path below ever rescans the corpus.
-    def phase[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[graft] cc phase $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
     // parquet-backed (the hammingPairs memo): no cache — the probe
     // count and the first contraction round each re-scan two long
     // columns vectorized, which is far cheaper than building a
     // deserialized row cache of the full pair set (measured 26 s of
     // pure cache-build at the 27.5M-edge sf10 graph)
     val pairDf = hammingPairs(s, dir).select(col("id1"), col("id2"))
-    val labeled = phase("connected-components")(connectedComponents(s, pairDf))
-    phase("backfill-plan") {
-      val singletons = Tables.documents(s, dir).select(col("doc_id"))
-        .join(labeled.select(col("doc_id")), Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("doc_id").as("rep"))
-      labeled.union(singletons)
-        .select(col("doc_id"), col("rep").as("cluster_rep"))
-    }
+    val labeled = connectedComponents(s, pairDf)
+    val singletons = Tables.documents(s, dir).select(col("doc_id"))
+      .join(labeled.select(col("doc_id")), Seq("doc_id"), "left_anti")
+      .select(col("doc_id"), col("doc_id").as("rep"))
+    labeled.union(singletons)
+      .select(col("doc_id"), col("rep").as("cluster_rep"))
   }
 
   /** Connected components of an (id1, id2) edge set → (doc_id, rep)
@@ -537,10 +513,7 @@ object DedupQueries {
     // when the graph actually fits the driver bound. (The earlier
     // probe collected threshold+1 boxed rows just to decide: ~3.5 s of
     // pure driver transfer at the 27.5M-edge sf10 graph.)
-    val t0 = System.nanoTime()
     val edgeCount = pairDf.count()
-    System.err.println(
-      f"[graft] cc probe ($edgeCount edges): ${(System.nanoTime() - t0) / 1e9}%.2f s")
     if (edgeCount <= threshold)
       ccUnionFindLocal(s, pairDf.as[(Long, Long)].collect())
     else s.conf.get("spark.graft.cc.algorithm", "star") match {
@@ -630,7 +603,8 @@ object DedupQueries {
     // the previous round's PERSISTED rdd (labels is just a mapValues
     // view of it, so the view must never be the unpersist target)
     var prevPersisted: RDD[_] = labels
-    while (changed > 0 && rounds < maxRounds) {
+    try while (changed > 0 && rounds < maxRounds) {
+      StageRecorder.setIteration(s.sparkContext, rounds + 1)
       // messages: min neighbor label arriving at each dst
       val nbrMin = edges.join(labels)
         .map { case (_, (dst, rep)) => (dst, rep) }
@@ -648,8 +622,7 @@ object DedupQueries {
       prevPersisted.unpersist(blocking = false)
       prevPersisted = joined
       rounds += 1
-      System.err.println(s"[graft] cc round $rounds: changed=$changed")
-    }
+    } finally StageRecorder.clearIteration(s.sparkContext)
     if (changed != 0)
       throw new IllegalStateException(
         s"simhashClusters: min-label propagation not converged after " +
@@ -699,7 +672,6 @@ object DedupQueries {
     val preContract =
       s.conf.get("spark.graft.cc.preContract", "true").toBoolean
     val (inputEdges, prePersisted) = if (preContract) {
-      val tp = System.nanoTime()
       val forest = pairDf.select(col("id1"), col("id2")).as[(Long, Long)]
         .mapPartitions(it => CcKernels.spanningForest(it))
         .toDF("id1", "id2")
@@ -730,9 +702,6 @@ object DedupQueries {
           s.conf.set("spark.sql.files.openCostInBytes", oldCost)
         }
       val fc = planned.count()
-      System.err.println(
-        f"[graft] cc pre-contract: $fc forest edges in " +
-          f"${(System.nanoTime() - tp) / 1e9}%.2f s")
       if (finishThreshold > 0 && fc <= finishThreshold) {
         val arr = forest.as[(Long, Long)].collect()
         forest.unpersist(blocking = false)
@@ -765,8 +734,8 @@ object DedupQueries {
       // back through every prior round's broadcast lookup
       var prevBc: Option[org.apache.spark.broadcast.Broadcast[_]] = None
       var rounds = 0
-      while (rounds < dfRounds) {
-        val tr = System.nanoTime()
+      try while (rounds < dfRounds) {
+        StageRecorder.setIteration(s.sparkContext, rounds + 1)
         // Large-star needs exactly ONE emission per edge: orienting
         // (lo, hi) = (min, max), the only center that links anything
         // through this edge is lo — it links hi to mm(lo), the minimum
@@ -797,15 +766,11 @@ object DedupQueries {
         // shuffle join below remains the honest path — the same
         // size-gated pattern as broadcast-vs-shuffle join selection.
         val nNodes = m.count()
-        System.err.println(
-          f"[graft] cc df min-table: $nNodes nodes in ${(System.nanoTime() - tr) / 1e9}%.2f s")
         val bcastGate =
           s.conf.get("spark.graft.cc.broadcastNodeThreshold", "8000000").toLong
         var bcOpt: Option[org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Long])]] = None
         val nxt = (if (nNodes <= bcastGate) {
           val mm = m.as[(Long, Long)].collect().sortBy(_._1)
-          System.err.println(
-            f"[graft] cc df min-collect: ${(System.nanoTime() - tr) / 1e9}%.2f s cum")
           m.unpersist(blocking = false)
           val keys = new Array[Long](mm.length)
           val vals = new Array[Long](mm.length)
@@ -831,13 +796,8 @@ object DedupQueries {
         // still recompute — the driver re-ships the broadcast value
         bcOpt.foreach(_.unpersist(blocking = false))
         rounds += 1
-        System.err.println(
-          f"[graft] cc df large-star $rounds: edges=$cnt " +
-            f"in ${(System.nanoTime() - tr) / 1e9}%.2f s")
         if (cnt <= finishThreshold) {
-          val tc = System.nanoTime()
           val arr = nxt.as[(Long, Long)].collect()
-          val tuf = System.nanoTime()
           nxt.unpersist(blocking = false)
           persisted.foreach(_.unpersist(blocking = false))
           // out below is parallelize-backed — nothing depends on the
@@ -845,12 +805,7 @@ object DedupQueries {
           prevBc.foreach(_.destroy())
           bcOpt.foreach(_.destroy())
           lastStarRounds = rounds
-          val out = ccUnionFindLocal(s, arr)
-          System.err.println(
-            f"[graft] cc finish (${arr.length} edges): collect " +
-              f"${(tuf - tc) / 1e9}%.2f s, uf+plan " +
-              f"${(System.nanoTime() - tuf) / 1e9}%.2f s")
-          return out
+          return ccUnionFindLocal(s, arr)
         }
         persisted.foreach(_.unpersist(blocking = false))
         persisted = Some(nxt)
@@ -866,7 +821,7 @@ object DedupQueries {
         prevBc.foreach(_.unpersist(blocking = false))
         prevBc = bcOpt
         cur = nxt
-      }
+      } finally StageRecorder.clearIteration(s.sparkContext)
       val out = ccStarRddLoop(s, cur, finishThreshold, rounds)
       persisted.foreach(_.unpersist(blocking = false))
       // same reachability argument: the RDD loop's output may retain
@@ -957,8 +912,8 @@ object DedupQueries {
       lastStarRounds = rounds
       ccUnionFindLocal(s, arr)
     }
-    while (!converged && rounds < maxRounds) {
-      val tr = System.nanoTime()
+    try while (!converged && rounds < maxRounds) {
+      StageRecorder.setIteration(s.sparkContext, rounds + 1)
       val half =
         if (finishThreshold > 0) {
           val ls = largeStar(edges).distinct(nParts)
@@ -967,9 +922,6 @@ object DedupQueries {
           val lsCount = ls.count()
           if (lsCount <= finishThreshold) {
             rounds += 1
-            System.err.println(
-              f"[graft] cc large-star ${rounds}: edges=$lsCount " +
-                f"in ${(System.nanoTime() - tr) / 1e9}%.2f s (local finish)")
             return finishLocally(ls, Seq(edges, ls))
           }
           ls
@@ -979,8 +931,6 @@ object DedupQueries {
       next.localCheckpoint()
       val nextCount = next.count()
       rounds += 1
-      System.err.println(f"[graft] cc star round $rounds: edges=$nextCount " +
-        f"in ${(System.nanoTime() - tr) / 1e9}%.2f s")
       if (finishThreshold > 0 && nextCount <= finishThreshold)
         return finishLocally(next, Seq(edges, half, next))
       // fixpoint: the (already deduplicated) star edge set reproduces
@@ -995,7 +945,7 @@ object DedupQueries {
       prevCount = nextCount
       prev.unpersist(blocking = false)
       half.unpersist(blocking = false) // no-op when the half wasn't persisted
-    }
+    } finally StageRecorder.clearIteration(s.sparkContext)
     if (!converged)
       throw new IllegalStateException(
         s"simhashClusters: star contraction not converged after " +

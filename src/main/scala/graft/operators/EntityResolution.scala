@@ -84,7 +84,7 @@ object EntityResolution {
     * row. One signature array per row means ONE registry scan, ONE
     * explode, and ONE shuffled equi-join realize all three families
     * (the unioned three-join form paid triple scans and exchanges). */
-  private def taggedSigs(c: String, dirtySide: Boolean): Column = {
+  private[graft] def taggedSigs(c: String, dirtySide: Boolean): Column = {
     val identityTag = if (dirtySide) "a:" else "b:"
     val deletionTag = if (dirtySide) "b:" else "a:"
     expr(
@@ -98,11 +98,8 @@ object EntityResolution {
          |                substring($c, i + 1)))))""".stripMargin)
   }
 
-  /** Probe hooks (graft.tools.ProfileEr) — internals exposed read-only
-    * so the volume profiler instruments the exact production stages. */
+  /** The dirty-name expression, for the streaming ER bench's feed. */
   private[graft] def dirtyNameSqlForProbe: String = dirtyNameSql
-  private[graft] def taggedSigsForProbe(c: String, dirtySide: Boolean): Column =
-    taggedSigs(c, dirtySide)
 
   private def registries(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {

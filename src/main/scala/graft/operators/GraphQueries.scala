@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{StageRecorder, Tables}
 
 /** Iterative graph analytics over the order graph: PageRank on the
   * customer–supplier bipartite graph (an edge per distinct
@@ -296,7 +296,7 @@ object GraphQueries {
     // on the driver event loop) is a fixed driver tax paid ~47 times.
     // The adjacency itself (and everything outside this loop) builds
     // under AQE when warm; on a COLD session the persisted adjacency
-    // is first materialized by the first probe job inside the toggled
+    // is first materialized by the first-iteration job inside the toggled
     // window, so its one-time edge-scale build runs under the loop's
     // AQE setting — acceptable (the build is a bounded distinct +
     // repartition; forcing a pre-toggle materializing action would
@@ -354,26 +354,20 @@ object GraphQueries {
     // aggregate, instead of two (r16 shape: checkpoint job + probe
     // job). The persist registration still happens at the call, so
     // the registry snapshot captures the block ids as before.
-    def checkpointed(df: DataFrame): (DataFrame, Set[Int]) = {
+    // The first iteration alone is checkpointed EAGERLY: lazily, its
+    // blocks (and a cold adjacency build) would be computed inside
+    // iteration 2's broadcast job, and the per-iteration layer record
+    // (StageRecorder.IterationKey, set below) could not tell the two
+    // apart. One extra node-scale job per run.
+    def checkpointed(df: DataFrame, eager: Boolean = false)
+        : (DataFrame, Set[Int]) = {
       val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint(false)
+      val out = df.localCheckpoint(eager)
       (out, (sc.getPersistentRDDs.keySet -- before).toSet)
     }
     def drop(ids: Set[Int]): Unit =
       ids.foreach(id => sc.getPersistentRDDs.get(id)
         .foreach(_.unpersist(blocking = false)))
-    // Per-iteration cost split, always collected (two nanoTime pairs
-    // per iteration), per-iteration lines printed only under
-    // spark.graft.pagerank.profile — the instrument behind the
-    // "remaining floor = checkpoint-write + genuinely sequential
-    // iterations" claim (r16 verdict asked for the breakdown, not the
-    // assertion). Since the r17 lazy-checkpoint fusion the whole
-    // iteration — join+agg compute, block write AND the convergence
-    // maxima — is ONE job timed by the probe pair; the `plan` pair
-    // times only driver-side plan construction.
-    val profile =
-      s.conf.get("spark.graft.pagerank.profile", "false").toBoolean
-    var iterateSec, probeSec, dropSec = 0.0
     // spark.graft.pagerank.loopAqe: "auto" (default) keeps AQE OFF
     // inside the loop while the node set is small and turns it back
     // ON past spark.graft.pagerank.loopAqeNodesMin (default 500k).
@@ -388,73 +382,50 @@ object GraphQueries {
     // sf0.1: off 12.8 s vs on 13.7 s); at sf10's 1.65M nodes the
     // duplicate build dominates (measured: ~44 s of per-iteration
     // driver/broadcast phase, ~halved by reuse) and AQE wins.
-    // Explicit true/false overrides for A/B runs.
-    val loopAqe = s.conf.get("spark.graft.pagerank.loopAqe", "auto") match {
+    // Explicit true/false overrides for A/B runs, case-insensitive as
+    // Spark's own boolean confs are.
+    val loopAqeSetting = s.conf.get("spark.graft.pagerank.loopAqe", "auto")
+    val loopAqe = loopAqeSetting.toLowerCase(java.util.Locale.ROOT) match {
       case "auto" =>
         val minNodes = s.conf
           .get("spark.graft.pagerank.loopAqeNodesMin", "500000").toLong
         (nodeBound(s, dir) >= minNodes).toString
       case explicit @ ("true" | "false") => explicit
-      case bad =>
+      case _ =>
         // fail HERE naming the graft conf — an unvalidated pass-through
         // surfaces as an IllegalArgumentException from conf.set with no
         // hint which setting caused it
         throw new IllegalArgumentException(
           s"spark.graft.pagerank.loopAqe must be one of true/false/auto, " +
-            s"got '$bad'")
+            s"got '$loopAqeSetting'")
     }
     s.conf.set(aqeKey, loopAqe)
     try {
-    var (ranks, ranksIds) = checkpointed(firstIteration(adj))
+    StageRecorder.setIteration(sc, 1)
+    var (ranks, ranksIds) = checkpointed(firstIteration(adj), eager = true)
     var iters = 1
     var converged = false
     while (!converged && iters < maxIters) {
+      StageRecorder.setIteration(sc, iters + 1)
       // dr rides in the checkpointed frame itself (nextIterationDelta's
       // second broadcast probe), so the convergence check is a bare
       // scan-aggregate of blocks the checkpoint just materialized — the
       // previous union→groupBy(id) probe re-SHUFFLED two node-sized
       // frames every iteration, which the r16 exchange-free adjacency
       // left as the loop's dominant per-iteration exchange
-      val t0 = System.nanoTime()
-      val iterPlan = nextIterationDelta(adj, ranks, hint)
-      val (next, nextIds) = checkpointed(iterPlan)
-      val t1 = System.nanoTime()
+      val (next, nextIds) =
+        checkpointed(nextIterationDelta(adj, ranks, hint))
       // the probe aggregate IS the materializing action of the lazy
       // checkpoint above: one job computes the edge-scale iteration,
-      // caches the node blocks, and reduces the convergence maxima.
-      // Bucket caveat: with loopAqe OFF, t1-t0 is pure driver-side
-      // plan construction and t2-t1 the fused job; with loopAqe ON,
-      // localCheckpoint(false) calls queryExecution.toRdd and
-      // AdaptiveSparkPlanExec eagerly materializes broadcast stages
-      // at that point, so the AQE-on `plan=` bucket also carries the
-      // node-rank broadcast build, not just planning
+      // caches the node blocks, and reduces the convergence maxima
       val probe = next
         .agg(max(abs(col("dr"))), max(col("r"))).head()
-      val t2 = System.nanoTime()
       // an EMPTY graph (no edges at this dir) aggregates to nulls —
       // zero deltas below declare immediate convergence instead of NPE
       val (delta, maxRank) =
         if (probe.isNullAt(0)) (0L, 0L)
         else (probe.getLong(0), probe.getLong(1))
       drop(ranksIds)
-      val t3 = System.nanoTime()
-      iterateSec += (t1 - t0) / 1e9
-      probeSec += (t2 - t1) / 1e9
-      dropSec += (t3 - t2) / 1e9
-      if (profile) {
-        System.err.println(f"[pagerank] iter=${iters + 1}%d " +
-          f"plan=${(t1 - t0) / 1e9}%.3f " +
-          f"iterate_checkpoint_probe=${(t2 - t1) / 1e9}%.3f " +
-          f"drop=${(t3 - t2) / 1e9}%.3f " +
-          f"delta=$delta%d max_rank=$maxRank%d")
-        // one-time plan audit: the EXECUTED adaptive plan of the
-        // iteration job (the probe above materialized it), where the
-        // prev attach must show a ReusedExchange of the src join's
-        // node-rank broadcast — the claim behind [[nextIterationDelta]]
-        if (iters == 1)
-          System.err.println("[pagerank] iteration executed plan:\n" +
-            iterPlan.queryExecution.executedPlan.toString)
-      }
       ranks = next
       ranksIds = nextIds
       iters += 1
@@ -462,11 +433,6 @@ object GraphQueries {
       // permissive tolerances (the spec passes Long.MaxValue)
       converged = delta.toDouble <= maxRank.toDouble * epsPpm / 1e6
     }
-    System.err.println(f"[pagerank] breakdown: iters=$iters%d " +
-      f"plan=$iterateSec%.1fs iterate_checkpoint_probe=$probeSec%.1fs " +
-      f"drop=$dropSec%.1fs (the lazy checkpoint makes the probe " +
-      "aggregate the materializing action — join+agg, block write " +
-      "and convergence maxima are ONE job per iteration)")
     val pinned = ranksIds
     ConvergedRanks(
       ranks.select(col("id").as("node_id"), col("r").as("rank_scaled"))
@@ -474,9 +440,12 @@ object GraphQueries {
       iters,
       () => drop(pinned),
       converged)
-    } finally aqeExplicit match {
-      case Some(v) => s.conf.set(aqeKey, v)
-      case None => s.conf.unset(aqeKey)
+    } finally {
+      StageRecorder.clearIteration(sc)
+      aqeExplicit match {
+        case Some(v) => s.conf.set(aqeKey, v)
+        case None => s.conf.unset(aqeKey)
+      }
     }
   }
 

@@ -194,7 +194,12 @@ object TextQueries {
     *
     * Scale: tf is one shuffle on (doc, word); df aggregates the tf
     * frame (word shuffle, already tiny); the ranking window shuffles
-    * on doc_id. No scan is repeated. */
+    * on doc_id. No scan is repeated.
+    *
+    * The token-scale tf frame is persisted and NOT released here: the
+    * caller owns the cache and must `clearCache`/unpersist after the
+    * result is consumed (Bench and Verify do, per query), as with
+    * [[DedupQueries.docShingleArrays]]. */
   def tfidfTopK(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // CACHED: tf feeds two consumers (the ranking join's left side and
@@ -205,7 +210,7 @@ object TextQueries {
     // plans/r18/t_tfidf_topk_sf10_before.txt: two full
     // FileScan+explode+Exchange subtrees). Caching computes the
     // token-scale pass once; measured 0.85x warm at sf10, 3/3
-    // interleaved rounds (ProfileTextCache). Harness-scoped like
+    // interleaved rounds (OPTIMIZATION_r18.md §1). Harness-scoped like
     // [[DedupQueries.docShingleArrays]]: Bench/Verify clear caches per
     // query; at 100 TB the tf table is the standard materialized
     // intermediate.
@@ -698,15 +703,14 @@ object TextQueries {
       // tokenize+explode+shuffle pass (plan audit
       // plans/r18/t_quality_classifier_sf10_before.txt). Caching the
       // tiny aggregate drops one token-scale pass; measured 0.92x at
-      // sf10, 3/3 interleaved rounds (ProfileTextCache). Scoped to
+      // sf10, 3/3 interleaved rounds (OPTIMIZATION_r18.md §2). Scoped to
       // this branch only: the pruned branch already funnels counts
       // into ONE tagged-union model job whose exchange is planned
       // once. Harness-scoped cache, cleared by Bench/Verify per query.
-      val countsC = counts
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val totalsC = countsC.agg(sum(col("c_t")).as("nt"),
-        sum(col("c_o")).as("no"), count(lit(1)).as("v"))
-      val w = countsC.crossJoin(broadcast(totalsC))
+      // persist returns `counts` itself, and `totals` then reads the
+      // cached relation through the CacheManager
+      counts.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val w = counts.crossJoin(broadcast(totals))
         .select(col("w"), weight(col("c_t"), col("c_o")).as("w_scaled"))
       toks.join(w, Seq("w"))
         .groupBy(col("doc_id"))

@@ -10,7 +10,7 @@ import graft.SparkTestSession
   * definition), over grid-snapping random vectors so exact TIES occur
   * and the lowest-code rule is exercised. Added in r18 while
   * evaluating the decomposed ‖c‖² − 2q·c argmin (rejected on
-  * measurement — see tools/ProfileEncode); kept as the
+  * measurement — see OPTIMIZATION_r18.md §3); kept as the
   * implementation-independent equivalence pin for any future kernel
   * rewrite. */
 class PqEncodeSpec extends AnyFunSuite {

@@ -26,6 +26,19 @@ class GraphAqeScopeSpec extends AnyFunSuite {
     } finally spark.conf.unset(LoopKey)
   }
 
+  test("loopAqe is case-insensitive, as Spark's boolean confs are") {
+    spark.conf.set(LoopKey, "TRUE")
+    try GraphQueries.pageRankConverged(spark, dir, maxIters = 2).release()
+    finally spark.conf.unset(LoopKey)
+    spark.conf.set(LoopKey, "of")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        GraphQueries.pageRankConverged(spark, dir, maxIters = 2)
+      }
+      assert(e.getMessage.contains(LoopKey), e.getMessage)
+    } finally spark.conf.unset(LoopKey)
+  }
+
   test("restore leaves an explicitly-set adaptive.enabled at its value") {
     spark.conf.set(AqeKey, "true")
     try {

@@ -74,7 +74,7 @@ class GraphErSpec extends AnyFunSuite {
     import spark.implicits._
     // the claim under test is about the CANDIDATE stream, so rerun the
     // tagged-signature join WITHOUT the levenshtein confirm (via the
-    // operator's probe hooks) and assert every raw collision is a true
+    // operator's signature builder) and assert every raw collision is a true
     // lev<=1 pair — a regression reintroducing the deletion×deletion
     // distance-2 class ("ab"~"ba", "xy"~"yx" swaps planted) would
     // surface HERE, where the confirmed-output assertion alone could
@@ -85,10 +85,10 @@ class GraphErSpec extends AnyFunSuite {
       .toDF("match_id", "cname")
     val raw = left
       .select(col("src_id"), col("dname"),
-        explode(EntityResolution.taggedSigsForProbe("dname", dirtySide = true))
+        explode(EntityResolution.taggedSigs("dname", dirtySide = true))
           .as("sig"))
       .join(right.select(col("match_id"), col("cname"),
-        explode(EntityResolution.taggedSigsForProbe("cname", dirtySide = false))
+        explode(EntityResolution.taggedSigs("cname", dirtySide = false))
           .as("sig")), "sig")
       .select(col("src_id"), col("match_id"), col("dname"), col("cname"))
       .as[(Long, Long, String, String)].collect()

@@ -15,11 +15,13 @@ def load(p):
            "skipped": d.get("skipped", []), "errors": d.get("errors", []),
            "queries": qs}
     # carry the r13+ per-leg instrumentation into the round artifact:
-    # ANN recall@5 per leg, the co-load/steal guard stamp, and the
-    # per-row repeat counts (which rows used the fast-row 3-repeat rule)
+    # ANN recall@5 per leg, the co-load/steal guard stamp, the per-row
+    # repeat counts (which rows used the fast-row 3-repeat rule), and
+    # each row's layer profile (stages, driver phases, loop iterations)
     for k in ("recall", "recall_structured", "coload", "reps",
               "calib_sec", "calib_end_sec", "calib_mid", "calib_mid_limit",
-              "history_trips", "comparable_total", "comparable_n"):
+              "history_trips", "comparable_total", "comparable_n",
+              "profile"):
         if k in d:
             out[k] = d[k]
     return out
