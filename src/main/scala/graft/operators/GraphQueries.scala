@@ -1,9 +1,67 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.{StageRecorder, Tables}
+
+/** [[GraphQueries.pageRankConverged]] result: the rank frame, the
+  * iteration count actually run, whether the tolerance (vs the cap)
+  * ended the loop, and the cleanup that drops what the loop pinned
+  * for the frame (nothing for the driver-local frame of the packed
+  * loop). */
+final case class ConvergedRanks(ranks: DataFrame, iters: Int,
+    release: () => Unit, converged: Boolean = true)
+
+/** One partition of the packed adjacency, in CSR form: the in-edges of
+  * destination `dst(i)` have their source indices at
+  * `src(off(i)) until src(off(i + 1))`. Indices are positions in the
+  * graph's sorted node-id array. */
+private[graft] final class CsrBlock(val dst: Array[Int], val off: Array[Int],
+    val src: Array[Int]) extends Serializable {
+
+  /** One iteration for this block's destinations, in `dst` order:
+    * Base + (Damp · Σ contrib(src)) div 100. The arithmetic is exact,
+    * so an overflow throws as Spark's ANSI `sum` does instead of
+    * wrapping into a wrong rank. */
+  def gatherSum(contrib: Array[Long]): Array[Long] = {
+    val out = new Array[Long](dst.length)
+    var i = 0
+    while (i < out.length) {
+      var sum = 0L
+      var k = off(i)
+      val end = off(i + 1)
+      while (k < end) {
+        sum = Math.addExact(sum, contrib(src(k)))
+        k += 1
+      }
+      out(i) = Math.addExact(GraphQueries.Base,
+        Math.multiplyExact(GraphQueries.Damp, sum) / 100)
+      i += 1
+    }
+    out
+  }
+}
+
+/** The packed adjacency of one graph: sorted node ids and out-degrees
+  * on the driver, the CSR blocks persisted on the executors, and each
+  * block's destination indices (`blockDst(p)` is partition p's `dst`)
+  * so an iteration ships back only the sums. The id broadcast stays
+  * alive with the blocks: rebuilding a lost block maps ids to indices
+  * through it again. */
+private[graft] final class PackedGraph(val ids: Array[Long],
+    val deg: Array[Int], val blockDst: Array[Array[Int]],
+    val blocks: RDD[CsrBlock], idsB: Broadcast[Array[Long]]) {
+  def release(): Unit = {
+    blocks.unpersist(blocking = false)
+    idsB.destroy()
+  }
+}
 
 /** Iterative graph analytics over the order graph: PageRank on the
   * customer–supplier bipartite graph (an edge per distinct
@@ -20,28 +78,25 @@ import graft.{StageRecorder, Tables}
   * drift. Truncating (div) vs flooring (//) division agree because
   * every operand is non-negative.
   *
-  * Scale: the classic DataFrame-Pregel shape. Edges and out-degrees
-  * join ONCE outside the loop into a (src, dst, d) table that is
-  * clustered on the iteration's HOT key and persisted — under the
-  * default broadcast-rank regime that key is dst, the aggregation key,
-  * so each iteration is a broadcast probe of the in-place edge blocks
-  * followed by an exchange-FREE groupBy(dst): after construction the
-  * edge table never crosses the wire again and the only per-iteration
-  * movement is the node-sized rank broadcast. Skewed high-degree nodes
-  * are a sum on the dst side — partial aggregation absorbs them
-  * map-side. GraphX was considered and declined: RDD-based, no
-  * Catalyst, and the whole loop here stays in whole-stage codegen.
-  */
-/** [[GraphQueries.pageRankConverged]] result: the rank frame, the
-  * iteration count actually run, and the cleanup that unpersists the
-  * final iteration's pinned frame once the caller has consumed it. */
-final case class ConvergedRanks(ranks: DataFrame, iters: Int,
-    release: () => Unit, converged: Boolean = true)
-
+  * Scale: while the node set fits the driver
+  * (spark.graft.pagerank.broadcastNodesMax, checked against
+  * |customer| + |supplier|), the rank vector lives on the driver as a
+  * dense array and the edges live on the executors as a cached
+  * [[PackedGraph]] — int-indexed CSR blocks clustered by destination.
+  * An iteration is one job: broadcast the contribution vector
+  * r div deg, gather-sum it per destination in every block
+  * ([[CsrBlock.gatherSum]]), collect the node-scale sums. There is no
+  * SQL planning inside the loop, and each iteration's lineage is one
+  * step off the cached blocks, so a lost block is rebuilt from the
+  * blocks' own lineage instead of failing the query. Past the bound
+  * the rank vector cannot live on the driver, and a DataFrame loop
+  * (a shuffle-hash join against a src-clustered adjacency) takes over;
+  * it is also the reference the packed loop is specified against. */
 object GraphQueries {
 
   private[graft] val Damp = 85L   // damping * 100
   private[graft] val Base = 150000L // (1 - damping) on the 1e6 grid
+  private val Init = 1000000L       // rank 1.0, every node's r0
   // node-id space: suppliers shifted ABOVE any plausible custkey.
   // 2^40 ≈ 1.1e12 clears standard TPC-H custkeys (150k·SF — 1.5e10 at
   // SF 100k) while keeping rank·id packing far from BIGINT overflow;
@@ -50,117 +105,134 @@ object GraphQueries {
   // same constant, so the gate could not see it)
   private[graft] val SuppOffset = 1L << 40
 
-  /** The persisted (src, dst, d) adjacency. Its physical LAYOUT follows
-    * the iteration's join strategy (see [[joinStrategy]]):
-    *
-    *  - `broadcast` (the default under the node bound): clustered on
-    *    **dst** — the per-iteration AGGREGATION key. The broadcast rank
-    *    join preserves the streamed side's partitioning, so every
-    *    iteration's `groupBy(dst)` finds its required distribution
-    *    already satisfied and runs WITHOUT an exchange: the edge-scale
-    *    frame is shuffled exactly once, here at construction, instead
-    *    of once per iteration (~47 edge-scale shuffles saved on the
-    *    converged sf10 run — the r15 verdict's one remaining plan
-    *    target). The degree join rides the same broadcast bound (one
-    *    row per node), so construction costs ONE edge exchange total.
-    *  - `shuffle_hash`/`smj` (node set past the driver bound):
-    *    clustered on **src**, the join key, so the per-iteration join
-    *    re-exchanges only the node-sized rank frame; the aggregation
-    *    pays the edge-scale exchange (you cannot have both without
-    *    broadcasting one side — exactly the regime split the strategy
-    *    bound encodes).
-    *
-    * Construction-MEMOIZED per (session, table versions, layout):
-    * repeated constructions share ONE cache entry instead of leaking a
-    * fresh edge-scale persist per call (the [[DedupQueries]]
-    * cluster-table convention; in Bench this puts graph_pagerank in
-    * the heavyConstruction first-repeat set). */
-  private[graft] def adjacency(s: SparkSession, dir: String): DataFrame = {
-    val clusterOnDst = joinStrategy(s, dir) == "broadcast"
-    val layout = if (clusterOnDst) "dst" else "src"
-    // the memo key includes the layout, so an A/B run that toggles
-    // spark.graft.pagerank.join (or crosses broadcastNodesMax) would
-    // otherwise build a SECOND edge-scale persisted adjacency while
-    // the first stays pinned — evict the other layout's entry first
-    // (same-layout entries for an older table vintage ride along;
-    // they are equally stale)
-    val other = if (clusterOnDst) "src" else "dst"
-    Tables.evictMemoMatching(s, dir, "orders", s"pagerank-adj-$other")
-      .foreach {
-        case df: org.apache.spark.sql.Dataset[_] =>
-          df.unpersist(blocking = false)
-        case _ => ()
-      }
-    Tables.memoizedAtConstruction(s, dir, "orders",
-        s"pagerank-adj-$layout-${Tables.tableStamp(s, dir, "lineitem")}") {
-      val pairs = Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_custkey"))
-        .join(Tables.lineitem(s, dir)
-          .select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("c"),
-          (col("l_suppkey") + SuppOffset).as("p"))
-        .distinct()
-      val edges = pairs.select(col("c").as("src"), col("p").as("dst"))
-        .unionAll(pairs.select(col("p").as("src"), col("c").as("dst")))
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-      val adj =
-        if (clusterOnDst) edges.repartition(col("dst"))
-          .join(broadcast(deg), "src")
-        else edges.join(deg, "src")
-      adj.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+  private val RankSchema = StructType(Seq(
+    StructField("node_id", LongType, nullable = false),
+    StructField("rank_scaled", LongType, nullable = false)))
+
+  /** The directed edge set: one edge per distinct (customer, supplier)
+    * trading pair in each direction. Symmetric by construction, so
+    * every node's in-degree equals its out-degree and the destination
+    * set is the node set. */
+  private def edges(s: SparkSession, dir: String): DataFrame = {
+    val pairs = Tables.orders(s, dir)
+      .select(col("o_orderkey"), col("o_custkey"))
+      .join(Tables.lineitem(s, dir)
+        .select(col("l_orderkey"), col("l_suppkey")),
+        col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_custkey").as("c"),
+        (col("l_suppkey") + SuppOffset).as("p"))
+      .distinct()
+    pairs.select(col("c").as("src"), col("p").as("dst"))
+      .unionAll(pairs.select(col("p").as("src"), col("c").as("dst")))
   }
 
-  /** Release the session's cached adjacency for `dir`: unpersist the
-    * 2|E|-row frame and EVICT its construction memo. Both halves
-    * matter — an unpersist alone leaves the memo serving a frame that
-    * silently recomputes the orders⋈lineitem distinct once per
-    * iteration on the next pageRank call; a memo eviction alone leaks
-    * the cached blocks. A long-lived session running many graphs calls
-    * this per graph (Bench bulk-unpersists between queries; the
-    * eviction here keeps its re-runs honest too). */
-  def releaseAdjacency(s: SparkSession, dir: String): Unit =
-    Tables.evictMemoMatching(s, dir, "orders", "pagerank-adj-").foreach {
-      case df: org.apache.spark.sql.Dataset[_] =>
-        df.unpersist(blocking = false)
+  /** Construction-memoized per (session, table versions), like every
+    * edge-scale cache here: repeated calls share one entry, which
+    * [[releaseAdjacency]] releases. Building one form evicts the other,
+    * so crossing the node bound mid-session never pins two adjacencies. */
+  private def memoized[T](s: SparkSession, dir: String, form: String,
+      other: String)(build: => T): T = {
+    releaseMemo(s, dir, s"pagerank-$other-")
+    Tables.memoizedAtConstruction(s, dir, "orders",
+      s"pagerank-$form-${Tables.tableStamp(s, dir, "lineitem")}")(build)
+  }
+
+  private def releaseMemo(s: SparkSession, dir: String, prefix: String)
+      : Unit =
+    Tables.evictMemoMatching(s, dir, "orders", prefix).foreach {
+      case g: PackedGraph => g.release()
+      case df: Dataset[_] => df.unpersist(blocking = false)
       case _ => ()
     }
 
-  /** Iteration 1 unrolled: the initial vector is the CONSTANT 1e6, so
-    * r1 comes straight off the cached adjacency (contrib = 1e6 div
-    * deg(src)) with no rank join and no initial-node-set distinct —
-    * two shuffles saved vs joining a materialized r0. */
-  private def firstIteration(adj: DataFrame): DataFrame = adj
-    .groupBy(col("dst").as("id"))
-    .agg((lit(Base) + expr(s"($Damp * sum(1000000 div d)) div 100")).as("r"))
+  /** Build the [[PackedGraph]]. The edges are clustered and sorted by
+    * dst once; two jobs read that one sorted RDD, so the second reuses
+    * the first's shuffle output instead of re-running the
+    * orders⋈lineitem distinct:
+    *  1. each block reports its destination ids and in-degrees, which
+    *     the driver sorts into the node-id array and the out-degrees
+    *     (equal by symmetry, see [[edges]]);
+    *  2. each block maps its ids to indices by binary search over the
+    *     broadcast id array and packs its CSR arrays; the blocks are
+    *     persisted and materialized here, before iteration 1.
+    * A partition's dst set is fixed by the hash partitioning and its
+    * order by the sort, so a block rebuilt from lineage still matches
+    * the `blockDst` the first job reported. */
+  private[graft] def packed(s: SparkSession, dir: String): PackedGraph =
+    memoized(s, dir, "packed", "adj") {
+      val sc = s.sparkContext
+      val sorted = edges(s, dir)
+        .repartition(sc.defaultParallelism, col("dst"))
+        .sortWithinPartitions(col("dst"))
+        .queryExecution.toRdd
+      val runs = sorted.mapPartitions { rows =>
+        val ids = Array.newBuilder[Long]
+        val counts = Array.newBuilder[Int]
+        var last = 0L
+        var n = 0
+        rows.foreach { row =>
+          val d = row.getLong(1)
+          if (n > 0 && d != last) { ids += last; counts += n; n = 0 }
+          last = d
+          n += 1
+        }
+        if (n > 0) { ids += last; counts += n }
+        Iterator((ids.result(), counts.result()))
+      }.collect()
+      val ids = runs.flatMap(_._1)
+      java.util.Arrays.sort(ids)
+      val deg = new Array[Int](ids.length)
+      runs.foreach { case (ds, ns) =>
+        ds.indices.foreach(i => deg(java.util.Arrays.binarySearch(ids, ds(i))) = ns(i))
+      }
+      val blockDst = runs.map(_._1.map(java.util.Arrays.binarySearch(ids, _)))
+      val idsB = sc.broadcast(ids)
+      val blocks = sorted.mapPartitions { rows =>
+        val index = idsB.value
+        val dst = Array.newBuilder[Int]
+        val off = Array.newBuilder[Int]
+        val src = Array.newBuilder[Int]
+        var last = 0L
+        var n = 0 // edges packed so far
+        rows.foreach { row =>
+          val d = row.getLong(1)
+          if (n == 0 || d != last) {
+            dst += java.util.Arrays.binarySearch(index, d)
+            off += n
+            last = d
+          }
+          src += java.util.Arrays.binarySearch(index, row.getLong(0))
+          n += 1
+        }
+        off += n
+        Iterator(new CsrBlock(dst.result(), off.result(), src.result()))
+      }.setName(s"pagerank-csr $dir").persist(StorageLevel.MEMORY_AND_DISK)
+      blocks.count()
+      new PackedGraph(ids, deg, blockDst, blocks, idsB)
+    }
 
-  /** Per-iteration join shape: the rank frame has exactly one row per
-    * node, and the node count is bounded above by |customer| +
-    * |supplier| — both known from cheap memoized metadata counts. When
-    * that bound fits a broadcast (spark.graft.pagerank.broadcastNodesMax,
-    * default 20M ≈ 320 MB of (id, r) rows), hint it: a shuffled join
-    * would re-SORT the 100M-row cached adjacency EVERY iteration,
-    * while the broadcast probe streams it in place and only the
-    * per-iteration aggregation shuffles (partial-aggregated, one row
-    * per node). Past the bound — a graph whose node set outgrows the
-    * driver — the hint drops away and the shuffled join is the
-    * correct plan. */
-  /** The per-iteration rank-join strategy — also the adjacency-layout
-    * switch (see [[adjacency]]). Measured at sf10 (3-iteration pageRank
-    * incl. adjacency build, local[32]): broadcast 39.7 s vs
-    * shuffle_hash 52.1 s — the per-iteration driver-side hash-relation
-    * build is CHEAPER than re-exchanging the rank frame against the
-    * cached adjacency, so broadcast is the default while the rank frame
-    * (one row per node, bounded by |customer| + |supplier| — cheap
-    * memoized metadata counts) fits the driver
-    * (spark.graft.pagerank.broadcastNodesMax, default 20M ≈ 320 MB);
-    * past it shuffle_hash is the fallback — it beats SMJ by not
-    * re-SORTING the cached edge-scale side every iteration. Explicit
-    * values of spark.graft.pagerank.join override for A/B runs. */
+  /** The join fallback's (src, dst, d) adjacency, clustered on src —
+    * the join key — so each iteration's shuffle-hash join re-exchanges
+    * only the node-sized rank frame. */
+  private def joinAdjacency(s: SparkSession, dir: String): DataFrame =
+    memoized(s, dir, "adj", "packed") {
+      val e = edges(s, dir)
+      e.join(e.groupBy(col("src")).agg(count(lit(1)).as("d")), "src")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
+
+  /** Release the session's cached adjacency for `dir` (packed blocks
+    * and their id broadcast, or the join fallback's frame) and EVICT
+    * its construction memo. Both halves matter — an unpersist alone
+    * leaves the memo serving an adjacency that recomputes once per
+    * iteration on the next pageRank call; a memo eviction alone leaks
+    * the cached blocks. A long-lived session running many graphs calls
+    * this per graph. */
+  def releaseAdjacency(s: SparkSession, dir: String): Unit =
+    releaseMemo(s, dir, "pagerank-")
+
   /** Upper bound on the node count: |customer| + |supplier|, from
-    * cheap memoized metadata counts. Shared by the join-strategy
-    * switch and the loop-AQE switch. */
+    * cheap memoized metadata counts. */
   private def nodeBound(s: SparkSession, dir: String): Long =
     Tables.memoizedAtConstruction(s, dir, "customer", "count") {
       Tables.customer(s, dir).count()
@@ -168,285 +240,164 @@ object GraphQueries {
       Tables.supplier(s, dir).count()
     }
 
-  private def joinStrategy(s: SparkSession, dir: String): String =
-    s.conf.get("spark.graft.pagerank.join", "auto") match {
-      case "auto" =>
-        val bcastMax = s.conf
-          .get("spark.graft.pagerank.broadcastNodesMax", "20000000").toLong
-        if (nodeBound(s, dir) <= bcastMax) "broadcast" else "shuffle_hash"
-      case explicit => explicit
-    }
+  /** Whether the rank vector fits the driver (default 20M nodes ≈
+    * 160 MB per rank array): the packed loop's precondition. */
+  private def fitsDriver(s: SparkSession, dir: String): Boolean =
+    nodeBound(s, dir) <= s.conf
+      .get("spark.graft.pagerank.broadcastNodesMax", "20000000").toLong
 
-  private def rankJoinHint(s: SparkSession, dir: String)
-      : DataFrame => DataFrame =
-    joinStrategy(s, dir) match {
-      case "broadcast" => broadcast(_)
-      case "smj" => identity
-      case _ => (df: DataFrame) => df.hint("shuffle_hash")
-    }
+  /** The loop both forms share: run `step` (one iteration, returning
+    * max |Δrank| and max rank) under the per-iteration layer-record
+    * property until `maxIters`, or — with a tolerance — until max
+    * |Δrank| ≤ epsPpm ppm of the current max rank. Iteration 1 starts
+    * from the uniform vector, so its delta is not a convergence
+    * signal. Returns the iteration count and whether the tolerance
+    * ended the loop. */
+  private def iterate(sc: SparkContext, maxIters: Int,
+      epsPpm: Option[Long])(step: () => (Long, Long)): (Int, Boolean) = {
+    var iters = 0
+    var converged = false
+    try {
+      while (!converged && iters < maxIters) {
+        iters += 1
+        StageRecorder.setIteration(sc, iters)
+        val (delta, maxRank) = step()
+        // double arithmetic: maxRank × epsPpm would overflow Long for
+        // permissive tolerances (the spec passes Long.MaxValue)
+        converged = iters > 1 &&
+          epsPpm.exists(e => delta.toDouble <= maxRank.toDouble * e / 1e6)
+      }
+    } finally StageRecorder.clearIteration(sc)
+    (iters, converged)
+  }
 
-  private def nextIteration(adj: DataFrame, ranks: DataFrame,
-      hint: DataFrame => DataFrame): DataFrame =
-    // one Dataset step fewer on each side of the aggregate (the
-    // contrib projection folds into sum(), the id rename into the
-    // grouping key): every Dataset construction is an eager analyzer
-    // pass, and this plan is re-analyzed once per iteration — ~47
-    // times per converged run — so driver-side plan cost is part of
-    // the iteration cost here, not a one-off. The optimizer plants
-    // the same pre-agg projection either way; the physical plan is
-    // unchanged (partial sum below, exchange-free final agg on dst).
-    adj.join(hint(ranks), adj("src") === ranks("id"))
+  /** The packed loop: the driver holds r, broadcasts r div deg, and
+    * scatters the blocks' sums into the next vector. Returns the
+    * driver-local (node_id, rank_scaled) frame ordered by node_id. */
+  private def packedRanks(s: SparkSession, dir: String, maxIters: Int,
+      epsPpm: Option[Long]): (DataFrame, Int, Boolean) = {
+    val g = packed(s, dir)
+    val sc = s.sparkContext
+    var r = Array.fill(g.ids.length)(Init)
+    val (iters, converged) = iterate(sc, maxIters, epsPpm) { () =>
+      val contrib = sc.broadcast(Array.tabulate(r.length)(i => r(i) / g.deg(i)))
+      val sums =
+        try g.blocks.map(_.gatherSum(contrib.value)).collect()
+        finally contrib.destroy()
+      val next = new Array[Long](r.length)
+      sums.indices.foreach { p =>
+        val dst = g.blockDst(p)
+        dst.indices.foreach(k => next(dst(k)) = sums(p)(k))
+      }
+      var delta = 0L
+      var maxRank = 0L
+      next.indices.foreach { i =>
+        delta = math.max(delta, math.abs(next(i) - r(i)))
+        maxRank = math.max(maxRank, next(i))
+      }
+      r = next
+      (delta, maxRank)
+    }
+    val rows = new java.util.ArrayList[Row](r.length)
+    g.ids.indices.foreach(i => rows.add(Row(g.ids(i), r(i))))
+    (s.createDataFrame(rows, RankSchema), iters, converged)
+  }
+
+  /** One join-fallback iteration: (id, r) → (id, r'). */
+  private def joinStep(adj: DataFrame, ranks: DataFrame): DataFrame =
+    adj.join(ranks.hint("shuffle_hash"), adj("src") === ranks("id"))
       .groupBy(adj("dst").as("id"))
       .agg((lit(Base) + expr(s"($Damp * sum(r div d)) div 100")).as("r"))
 
-  /** [[nextIteration]] plus an in-plan delta column: a SECOND probe of
-    * the same broadcast rank frame — on the aggregated node id this
-    * time — attaches each node's previous rank, so dr = r − prev lands
-    * in the checkpointed frame itself. Node-scale rows after the agg,
-    * broadcast-hash probe in the same stage: the convergence check
-    * then needs only a scan-aggregate of blocks the checkpoint already
-    * materialized, replacing the old per-iteration union→groupBy probe
-    * that re-shuffled two node-sized frames (~46 node-scale exchanges
-    * on the sf10 converged run — the floor the r16 dst-clustered
-    * adjacency exposed). The inner join drops no rows: the symmetric
-    * edge union makes src-set = dst-set = the node set, and every rank
-    * frame carries exactly that node set. */
-  private def nextIterationDelta(adj: DataFrame, ranks: DataFrame,
-      hint: DataFrame => DataFrame): DataFrame = {
-    // Join the UNPROJECTED rank frame (renames happen after): both
-    // probes of the iteration — the src join inside [[nextIteration]]
-    // and this prev attach — then broadcast the IDENTICAL plan
-    // (same LogicalRDD child, same id build key), so the physical
-    // plan's second BroadcastExchange canonicalizes equal to the
-    // first and becomes a ReusedExchange: ONE node-sized hash
-    // relation is built per iteration instead of two. The old form
-    // renamed (id→pid, r→prev_r) BEFORE the broadcast, and that
-    // alias-only Project defeated exchange reuse.
-    // `next` carries `ranks` in its lineage (the src join), so bare
-    // df("col") disambiguation trips DetectAmbiguousSelfJoin — the
-    // dataset aliases resolve it; EliminateSubqueryAliases removes
-    // them before physical planning, so the broadcast child stays
-    // canonically equal to the src join's and reuse still fires.
-    val next = nextIteration(adj, ranks, hint).as("nx")
-    next.join(hint(ranks.as("pv")), col("nx.id") === col("pv.id"))
-      .select(col("nx.id").as("id"), col("nx.r").as("r"),
-        (col("nx.r") - col("pv.r")).as("dr"))
-  }
+  private def initialRanks(adj: DataFrame): DataFrame =
+    adj.select(col("src").as("id")).distinct().withColumn("r", lit(Init))
 
-  def pageRank(s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
-    val adj = adjacency(s, dir)
-    require(iters >= 1, "pageRank needs at least one iteration")
-    var ranks = firstIteration(adj)
-    val hint = rankJoinHint(s, dir)
-    for (_ <- 2 to iters) ranks = nextIteration(adj, ranks, hint)
-    val out = ranks
-      .select(col("id").as("node_id"), col("r").as("rank_scaled"))
+  private def rankFrame(ranks: DataFrame): DataFrame =
+    ranks.select(col("id").as("node_id"), col("r").as("rank_scaled"))
       .orderBy(col("node_id"))
-    // materialize before unpersist would be ideal, but the bench/verify
-    // harness counts/writes immediately; keep adj pinned for this plan
-    // — callers running many graphs in one session release it with
-    // [[releaseAdjacency]] (bench unpersists all RDDs between queries)
-    out
+
+  /** The fixed-iteration form — the oracle form, which DuckDB mirrors
+    * as three unrolled CTEs. */
+  def pageRank(s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
+    require(iters >= 1, "pageRank needs at least one iteration")
+    if (fitsDriver(s, dir)) packedRanks(s, dir, iters, None)._1
+    else {
+      // a lazy chain: `iters` joins deep, planned once, and pinning
+      // nothing beyond the adjacency [[releaseAdjacency]] releases
+      val adj = joinAdjacency(s, dir)
+      rankFrame((1 to iters).foldLeft(initialRanks(adj))((r, _) => joinStep(adj, r)))
+    }
   }
 
   /** Convergence-driven variant: iterate until max |Δrank| ≤
     * `epsPpm` ppm of the current max rank or `maxIters`, returning
     * the rank frame, the iteration count actually run, and whether
-    * the tolerance (vs the cap) ended the loop. Each iteration's
-    * frame is materialized through a LAZY localCheckpoint (plan
-    * truncation — see the body comment) whose materializing action is
-    * the convergence probe itself — one fused job per iteration — so
-    * the NEXT iteration reads its blocks instead of replaying, and
-    * the predecessor's blocks are dropped as soon as its successor's
-    * delta is known — at most two node-sized frames are ever pinned
-    * beyond the shared adjacency. The delta COLUMN is computed inside
-    * the iteration plan ([[nextIterationDelta]] — a second probe of
-    * the already-broadcast rank frame, node-scale, same stage), so the
-    * convergence check is a shuffle-free scan-aggregate of the frame
-    * the checkpoint just materialized, bounded by the NODE count, not
-    * the edges.
-    * The final frame's blocks stay pinned (the caller is about to
-    * consume it) and are released through the result's `release()`
-    * handle, plus [[releaseAdjacency]] for the shared adjacency. The
-    * fixed-iters [[pageRank]] remains the oracle form — DuckDB
-    * mirrors its three unrolled CTEs; this is the production form for
-    * graphs whose mixing time is unknown. */
+    * the tolerance (vs the cap) ended the loop. The fixed-iters
+    * [[pageRank]] remains the oracle form; this is the production
+    * form for graphs whose mixing time is unknown.
+    *
+    * The tolerance is RELATIVE (default 0.1% of the max rank). An
+    * absolute epsilon on the unnormalized integer grid cannot scale:
+    * hub ranks grow with graph size (max |Δ| starts at 11.4M on the
+    * sf0.01 graph), so any fixed constant is unreachable on one SF and
+    * trivial on another. |Δ| contracts by ~the damping factor per step
+    * (measured 0.85/iter), so 0.1% of a hub-dominated spread needs
+    * ~30-40 iterations; the cap exists for graphs whose mixing is
+    * slower still, and the flag reports a cap hit honestly. */
   def pageRankConverged(s: SparkSession, dir: String,
       epsPpm: Long = 1000L, maxIters: Int = 60): ConvergedRanks = {
-    // The tolerance is RELATIVE — converge when max |Δrank| ≤ epsPpm
-    // ppm of the current max rank (default 0.1%). An absolute epsilon
-    // on the unnormalized integer grid cannot scale: hub ranks grow
-    // with graph size (measured max |Δ| starts at 11.4M on the sf0.01
-    // graph — 11400× an absolute eps of 1000), so any fixed constant
-    // is unreachable on one SF and trivial on another. |Δ| contracts
-    // by ~the damping factor per step (measured 0.85/iter, clean
-    // geometric decay), so 0.1% of a hub-dominated spread needs
-    // ~30-40 iterations; the cap exists for graphs whose mixing is
-    // slower still, and the flag below reports a cap hit honestly.
     require(maxIters >= 1, "pageRankConverged needs at least one iteration")
-    val adj = adjacency(s, dir)
-    val hint = rankJoinHint(s, dir)
-    // AQE off for the iteration loop only (restored in the finally):
-    // the per-iteration plan is STATIC — explicit broadcast hints, an
-    // exchange-free groupBy over the dst-clustered cached adjacency,
-    // and a ReusedExchange the static ReuseExchangeAndSubquery rule
-    // already plans — so adaptive re-planning can change nothing,
-    // while its per-query stage orchestration (TableCacheQueryStage /
-    // BroadcastQueryStage / ResultQueryStage creation + replan rounds
-    // on the driver event loop) is a fixed driver tax paid ~47 times.
-    // The adjacency itself (and everything outside this loop) builds
-    // under AQE when warm; on a COLD session the persisted adjacency
-    // is first materialized by the first-iteration job inside the toggled
-    // window, so its one-time edge-scale build runs under the loop's
-    // AQE setting — acceptable (the build is a bounded distinct +
-    // repartition; forcing a pre-toggle materializing action would
-    // charge every warm call an extra cached-adjacency scan to help
-    // only the cold one).
-    //
-    // CONCURRENCY CONTRACT: the toggle below mutates the SESSION conf
-    // for the loop's duration (restored in the finally, which also
-    // unset()s if the key was never explicitly set, so a library
-    // default is not frozen into an explicit value). A concurrent
-    // query planned on the SAME SparkSession during the loop would
-    // plan under the flipped value. This operator therefore assumes a
-    // single planning thread per session — the bench, Verify and the
-    // streaming mains all satisfy it. Callers that share one session
-    // across threads (e.g. batch + streaming at 100 TB) must wrap the
-    // call in their own session clone; a clone is not done here
-    // because the memoized adjacency/codebook caches are keyed per
-    // session and a silent clone would rebuild them per call.
-    // GraphAqeScopeSpec pins the restore semantics.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    // getAll lists only EXPLICITLY-set entries; getOption would fall
-    // through to the default and make the restore freeze it
-    val aqeExplicit: Option[String] = s.conf.getAll.get(aqeKey)
+    if (fitsDriver(s, dir)) {
+      val (ranks, iters, converged) = packedRanks(s, dir, maxIters, Some(epsPpm))
+      ConvergedRanks(ranks, iters, () => (), converged)
+    } else joinConverged(s, dir, epsPpm, maxIters)
+  }
+
+  /** The join fallback of [[pageRankConverged]]. Each iteration's
+    * frame carries its delta column (a node-scale join against the
+    * previous frame) and is materialized through a LAZY
+    * localCheckpoint whose materializing action is the convergence
+    * probe itself — one job per iteration. The checkpoint truncates
+    * the plan: cached plans keep their innerChildren, and the per-job
+    * plan-string rendering walks a chained loop's tree exponentially
+    * (a 20-iteration run once burned 15 driver-minutes rendering).
+    * Local checkpoint blocks live only on their executor, so an
+    * executor loss mid-loop fails this form; the packed loop rebuilds
+    * instead. The predecessor's blocks are dropped as soon as the
+    * successor's probe has run; the final frame's stay pinned until
+    * the result's `release()`. */
+  private def joinConverged(s: SparkSession, dir: String, epsPpm: Long,
+      maxIters: Int): ConvergedRanks = {
     val sc = s.sparkContext
-    // Each iteration is materialized through a localCheckpoint,
-    // not a bare persist: persist caches the DATA but the logical plan
-    // keeps growing — by iteration k the delta probe's tree nests k
-    // levels of cached-plan innerChildren with TWO branches each
-    // (union(next, ranks)), and the per-job plan-string rendering in
-    // SQLExecution walks that tree EXPONENTIALLY (measured: a 20-
-    // iteration run burned 15 driver-minutes in generateTreeString
-    // while executors sat idle). The checkpoint truncates the plan to
-    // a LogicalRDD scan, so every iteration plans and renders O(1).
-    // On a cluster, localCheckpoint trades HDFS durability for speed —
-    // the right call for an iterative loop whose restart replays from
-    // the (persisted) adjacency anyway. FAULT-TOLERANCE CAVEAT (load-
-    // bearing since the lazy-checkpoint fusion): local checkpoint
-    // blocks live only on their executor and the lineage is truncated,
-    // so an executor loss mid-loop FAILS the query rather than
-    // recomputing — the documented trade is "re-run the loop from the
-    // adjacency", not transparent recovery. Use reliable checkpoints
-    // if executors are preemptible.
+    val adj = joinAdjacency(s, dir)
     // localCheckpoint registers its blocks in the persistent-RDD
-    // registry; snapshotting the registry around the call captures the
-    // ids so the PREDECESSOR's blocks are dropped deterministically —
-    // at most two node-sized frames are ever pinned beyond the
-    // adjacency (the promise the release() contract documents).
-    // LAZY localCheckpoint: the logical-plan truncation to a
-    // LogicalRDD happens at the call either way, but eager=true would
-    // spend a dedicated job materializing the blocks and the probe
-    // below would then pay a SECOND job to scan them. Lazy defers
-    // materialization to the first action — the probe aggregate —
-    // so one job per iteration computes the edge-scale
-    // join+agg, caches the node blocks, and folds the convergence
-    // aggregate, instead of two (r16 shape: checkpoint job + probe
-    // job). The persist registration still happens at the call, so
-    // the registry snapshot captures the block ids as before.
-    // The first iteration alone is checkpointed EAGERLY: lazily, its
-    // blocks (and a cold adjacency build) would be computed inside
-    // iteration 2's broadcast job, and the per-iteration layer record
-    // (StageRecorder.IterationKey, set below) could not tell the two
-    // apart. One extra node-scale job per run.
-    def checkpointed(df: DataFrame, eager: Boolean = false)
-        : (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint(eager)
-      (out, (sc.getPersistentRDDs.keySet -- before).toSet)
-    }
+    // registry; snapshotting the registry around the call captures
+    // the ids to drop
     def drop(ids: Set[Int]): Unit =
       ids.foreach(id => sc.getPersistentRDDs.get(id)
         .foreach(_.unpersist(blocking = false)))
-    // spark.graft.pagerank.loopAqe: "auto" (default) keeps AQE OFF
-    // inside the loop while the node set is small and turns it back
-    // ON past spark.graft.pagerank.loopAqeNodesMin (default 500k).
-    // Why scale-dependent: the second broadcast probe (the prev
-    // attach) is a ReusedExchange only under AQE's runtime stage
-    // reuse — the static reuse rule does not canonicalize the two
-    // node-frame scans equal (the checkpointed LogicalRDD's preserved
-    // outputPartitioning differs by expr id) — so AQE-off builds the
-    // node-rank hash relation twice per iteration. At small node
-    // counts that duplicate build is microseconds while AQE's stage
-    // orchestration is a fixed driver tax paid ~47 times (measured
-    // sf0.1: off 12.8 s vs on 13.7 s); at sf10's 1.65M nodes the
-    // duplicate build dominates (measured: ~44 s of per-iteration
-    // driver/broadcast phase, ~halved by reuse) and AQE wins.
-    // Explicit true/false overrides for A/B runs, case-insensitive as
-    // Spark's own boolean confs are.
-    val loopAqeSetting = s.conf.get("spark.graft.pagerank.loopAqe", "auto")
-    val loopAqe = loopAqeSetting.toLowerCase(java.util.Locale.ROOT) match {
-      case "auto" =>
-        val minNodes = s.conf
-          .get("spark.graft.pagerank.loopAqeNodesMin", "500000").toLong
-        (nodeBound(s, dir) >= minNodes).toString
-      case explicit @ ("true" | "false") => explicit
-      case _ =>
-        // fail HERE naming the graft conf — an unvalidated pass-through
-        // surfaces as an IllegalArgumentException from conf.set with no
-        // hint which setting caused it
-        throw new IllegalArgumentException(
-          s"spark.graft.pagerank.loopAqe must be one of true/false/auto, " +
-            s"got '$loopAqeSetting'")
-    }
-    s.conf.set(aqeKey, loopAqe)
-    try {
-    StageRecorder.setIteration(sc, 1)
-    var (ranks, ranksIds) = checkpointed(firstIteration(adj), eager = true)
-    var iters = 1
-    var converged = false
-    while (!converged && iters < maxIters) {
-      StageRecorder.setIteration(sc, iters + 1)
-      // dr rides in the checkpointed frame itself (nextIterationDelta's
-      // second broadcast probe), so the convergence check is a bare
-      // scan-aggregate of blocks the checkpoint just materialized — the
-      // previous union→groupBy(id) probe re-SHUFFLED two node-sized
-      // frames every iteration, which the r16 exchange-free adjacency
-      // left as the loop's dominant per-iteration exchange
-      val (next, nextIds) =
-        checkpointed(nextIterationDelta(adj, ranks, hint))
-      // the probe aggregate IS the materializing action of the lazy
-      // checkpoint above: one job computes the edge-scale iteration,
-      // caches the node blocks, and reduces the convergence maxima
-      val probe = next
-        .agg(max(abs(col("dr"))), max(col("r"))).head()
-      // an EMPTY graph (no edges at this dir) aggregates to nulls —
-      // zero deltas below declare immediate convergence instead of NPE
-      val (delta, maxRank) =
-        if (probe.isNullAt(0)) (0L, 0L)
-        else (probe.getLong(0), probe.getLong(1))
-      drop(ranksIds)
+    var ranks = initialRanks(adj)
+    var pinned = Set.empty[Int]
+    val (iters, converged) = iterate(sc, maxIters, Some(epsPpm)) { () =>
+      val before = sc.getPersistentRDDs.keySet.toSet
+      // aliases: `ranks` is in the lineage of both sides, so bare
+      // df("col") references would trip DetectAmbiguousSelfJoin
+      val next = joinStep(adj, ranks).as("nx")
+        .join(ranks.hint("shuffle_hash").as("pv"), col("nx.id") === col("pv.id"))
+        .select(col("nx.id").as("id"), col("nx.r").as("r"),
+          (col("nx.r") - col("pv.r")).as("dr"))
+        .localCheckpoint(eager = false)
+      val nextIds = sc.getPersistentRDDs.keySet.toSet -- before
+      val probe = next.agg(max(abs(col("dr"))), max(col("r"))).head()
+      drop(pinned)
       ranks = next
-      ranksIds = nextIds
-      iters += 1
-      // double arithmetic: maxRank × epsPpm would overflow Long for
-      // permissive tolerances (the spec passes Long.MaxValue)
-      converged = delta.toDouble <= maxRank.toDouble * epsPpm / 1e6
+      pinned = nextIds
+      // an EMPTY graph aggregates to nulls: zero deltas declare
+      // immediate convergence instead of an NPE
+      if (probe.isNullAt(0)) (0L, 0L) else (probe.getLong(0), probe.getLong(1))
     }
-    val pinned = ranksIds
-    ConvergedRanks(
-      ranks.select(col("id").as("node_id"), col("r").as("rank_scaled"))
-        .orderBy(col("node_id")),
-      iters,
-      () => drop(pinned),
-      converged)
-    } finally {
-      StageRecorder.clearIteration(sc)
-      aqeExplicit match {
-        case Some(v) => s.conf.set(aqeKey, v)
-        case None => s.conf.unset(aqeKey)
-      }
-    }
+    val last = pinned
+    ConvergedRanks(rankFrame(ranks), iters, () => drop(last), converged)
   }
 
   private def rankCte(prev: String, cur: String): String =

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.GraftTestBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -353,10 +355,31 @@ class GraphErSpec extends AnyFunSuite {
   }
 
   test("pagerank plan reuses the persisted adjacency across iterations") {
-    val df = GraphQueries.pageRank(spark, dir)
-    df.count()
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("InMemoryTableScan") || p.contains("TableCacheQueryStage"), p)
-    assert(!p.contains("CartesianProduct"), p)
+    // the adjacency is construction-memoized: a second pageRank on the
+    // same dir reruns only the loop over the cached blocks — it
+    // persists nothing new and scans no table (the node-bound counts
+    // are memoized too, so no file scan runs at all)
+    val sc = spark.sparkContext
+    GraphQueries.releaseAdjacency(spark, dir)
+    val first = GraphQueries.pageRank(spark, dir).collect()
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          scans.add(e.stageInfo.name)
+    }
+    sc.addSparkListener(listener)
+    val again =
+      try GraphQueries.pageRank(spark, dir).collect()
+      finally {
+        GraftTestBridge.drainListenerBus(sc)
+        sc.removeSparkListener(listener)
+      }
+    try {
+      assert(again.toSeq === first.toSeq)
+      assert(sc.getPersistentRDDs.keySet.toSet === before)
+      assert(scans.isEmpty, scans)
+    } finally GraphQueries.releaseAdjacency(spark, dir)
   }
 }
