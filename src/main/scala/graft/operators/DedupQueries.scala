@@ -1,8 +1,10 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.{StageRecorder, Tables}
 import graft.functions.GraftFunctions.tokens
@@ -73,17 +75,10 @@ object DedupQueries {
     // millions), hashing the docs side and streaming the thin pair
     // stream through it beats sort-merge — A/B in the same warm JVM
     // at the sf10 corpus: 5.8 s vs 42 s for the verification stage.
-    // Conf escape hatch kept for profiling.
-    def strat(df: DataFrame): DataFrame =
-      docs.sparkSession.conf
-        .get("spark.graft.ngram.verifyJoin", "shuffle_hash") match {
-        case "smj" => df
-        case h => df.hint(h)
-      }
-    val a = strat(docs.select(col("doc_id").as("id1"), col("n_sh").as("n1"),
-      col("khs").as("k1")))
-    val b = strat(docs.select(col("doc_id").as("id2"), col("n_sh").as("n2"),
-      col("khs").as("k2")))
+    val a = docs.select(col("doc_id").as("id1"), col("n_sh").as("n1"),
+      col("khs").as("k1")).hint("shuffle_hash")
+    val b = docs.select(col("doc_id").as("id2"), col("n_sh").as("n2"),
+      col("khs").as("k2")).hint("shuffle_hash")
     cand.join(a, "id1").join(b, "id2")
       .withColumn("inter",
         graft.functions.HashExpressions.sortedIntersectCount(
@@ -342,25 +337,25 @@ object DedupQueries {
   def simhashPairs(s: SparkSession, dir: String): DataFrame =
     hammingPairs(s, dir).orderBy(col("id1"), col("id2"))
 
-  /** Rounds taken by the most recent star-contraction run — test
-    * observability for the O(log n) convergence claim. */
+  /** Test observability of the most recent connected-components run:
+    * the spanning forest's edge count (-1 when the pair set went
+    * straight to union-find) and the rounds the star loop ran (0 when
+    * the forest fit the driver bound). */
+  @volatile private[graft] var lastForestEdges: Long = -1
   @volatile private[graft] var lastStarRounds: Int = -1
 
   /** Test hook: run a NAMED CC path directly over an arbitrary
-    * (id1, id2) pair DataFrame (DedupClustersSpec's agreement tests).
-    * "propagate" is reachable ONLY through here and the
-    * spark.graft.cc.algorithm conf — without this the propagation
-    * loop had no executing test (the conf-forced spec comparison was
-    * served from the simhashClusters memo and compared the driver
-    * union-find's parquet with itself). */
+    * (id1, id2) pair DataFrame (DedupClustersSpec's agreement tests):
+    * "local" is driver union-find, "star" the path above the bound
+    * (spanning forest, then union-find or the star loop). Calling
+    * simhashClusters under forced confs instead would be served from
+    * its output memo and compare a parquet with itself. */
   private[graft] def ccForTest(s: SparkSession, pairDf: DataFrame,
       path: String): DataFrame = {
     import s.implicits._
     path match {
       case "local" => ccUnionFindLocal(s, pairDf.as[(Long, Long)].collect())
-      case "star" => ccStarDistributed(s, pairDf)
-      case "propagate" =>
-        ccPropagateDistributed(s, pairDf, 2 * pairDf.count())
+      case "star" => ccForest(s, pairDf, localEdgeThreshold(s))
       case other => throw new IllegalArgumentException(s"unknown cc path $other")
     }
   }
@@ -446,12 +441,9 @@ object DedupQueries {
     * keep-one-per-cluster decision (every doc labeled with the min
     * doc_id of its component).
     *
-    * Components come from min-label propagation: each round every node
-    * takes the minimum label among itself and its neighbors; the loop
-    * stops when no label changes (rounds ≈ component diameter, which
-    * is small for near-dup clusters). This is the standard
-    * large-graph CC pattern at 100 TB — the post-pruning edge set is
-    * sparse and each round is one shuffle on the edge key.
+    * Components come from [[connectedComponents]]: driver union-find
+    * under its edge bound, a spanning-forest pass and star contraction
+    * above it.
     *
     * The oracle computes the same fixpoint with a recursive CTE:
     * connected components are algorithm-independent, so the outputs
@@ -492,39 +484,52 @@ object DedupQueries {
   }
 
   /** Connected components of an (id1, id2) edge set → (doc_id, rep)
-    * with rep = component minimum. Size-based hybrid, same rationale
-    * as broadcast-vs-shuffle joins: the candidate pair set is
-    * post-LSH sparse and ALREADY materialized (caller caches it), so
-    * when it fits the driver comfortably, union-find there beats
-    * O(rounds) distributed passes by orders of magnitude; past the
-    * threshold the fully distributed star contraction takes over.
-    * Shared by the simhash clustering and the semantic-dedup
-    * operators. */
+    * with rep = component minimum, decided on one bound,
+    * `spark.graft.cc.localEdgeThreshold` (edges, default 2M): a pair
+    * set under it goes to driver union-find; over it, one narrow
+    * spanning-forest pass contracts it first, and the forest goes to
+    * union-find when it fits and to the distributed star loop when it
+    * does not. Every committed input ends in union-find (the largest,
+    * the sf10 hamming graph, contracts 27.5M → 616k-793k edges in the
+    * forest pass, by split count). Shared by the simhash clustering
+    * and the semantic-dedup operators. */
   private[graft] def connectedComponents(s: SparkSession,
       pairDf: DataFrame): DataFrame = {
     import s.implicits._
-    // MaxValue/2 cap: the driver finish allocates a 2×edges long array
-    val threshold = math.min(
-      s.conf.get("spark.graft.cc.localEdgeThreshold", "2000000").toLong,
-      Int.MaxValue / 2 - 1L).toInt
+    val threshold = localEdgeThreshold(s)
+    lastForestEdges = -1
+    lastStarRounds = -1
     // The pair set reaching here is always materialized (scratch
     // parquet via the hammingPairs/nearDupLsh memo, or caller-cached),
     // so a count() is cheap — decide the path on it and collect ONLY
     // when the graph actually fits the driver bound. (The earlier
     // probe collected threshold+1 boxed rows just to decide: ~3.5 s of
     // pure driver transfer at the 27.5M-edge sf10 graph.)
-    val edgeCount = pairDf.count()
-    if (edgeCount <= threshold)
+    if (pairDf.count() <= threshold)
       ccUnionFindLocal(s, pairDf.as[(Long, Long)].collect())
-    else s.conf.get("spark.graft.cc.algorithm", "star") match {
-      case "propagate" => ccPropagateDistributed(s, pairDf, 2 * edgeCount)
-      case _ => ccStarDistributed(s, pairDf)
+    else ccForest(s, pairDf, threshold)
+  }
+
+  private val LocalEdgeThresholdKey = "spark.graft.cc.localEdgeThreshold"
+
+  /** The driver bound in edges, validated the way Spark validates its
+    * own confs. 0 forces the star loop for any non-empty graph (the
+    * specs use it). Capped at Int.MaxValue/2: the union-find finish
+    * allocates a 2×edges long array. */
+  private def localEdgeThreshold(s: SparkSession): Int = {
+    val raw = s.conf.get(LocalEdgeThresholdKey, "2000000")
+    val v = try raw.trim.toLong catch {
+      case _: NumberFormatException => throw new IllegalArgumentException(
+        s"$LocalEdgeThresholdKey should be long, but was $raw")
     }
+    if (v < 0) throw new IllegalArgumentException(
+      s"'$raw' in $LocalEdgeThresholdKey is invalid. The edge bound must not be negative")
+    math.min(v, Int.MaxValue / 2 - 1L).toInt
   }
 
   /** Driver-side connected components: union-find with path compression
     * and union-by-min-root, so each component's final root is exactly
-    * its minimum doc_id (the same fixpoint the distributed path and the
+    * its minimum doc_id (the same fixpoint the star loop and the
     * oracle's recursive CTE reach). */
   private def ccUnionFindLocal(s: SparkSession,
       edges: Array[(Long, Long)]): DataFrame = {
@@ -553,301 +558,81 @@ object DedupQueries {
         rows.length / 50000 + 1))).toDF("doc_id", "rep")
   }
 
-  /** Distributed connected components: Pregel-style co-partitioned RDD
-    * min-label propagation — the one place this engine drops below the
-    * DataFrame API, for the same reason GraphX does: a Catalyst plan
-    * re-built, re-optimized, and re-codegen'd every round costs more
-    * than the round's work, and DataFrames cannot express "stay
-    * partitioned by this key across rounds". Edges are hash-partitioned
-    * ONCE; each round is one reduceByKey shuffle (messages to dst) plus
-    * a NARROW join back to the co-partitioned labels — zero redundant
-    * shuffle, no per-round planning. Partition count is sized by the
-    * observed edge count, so the same code runs 1 task at test scale
-    * and hundreds at 100 TB. */
-  /** `edgeCount` = DIRECTED edge count (2 × pair rows), passed down by
-    * the caller — connectedComponents just counted the pair set to
-    * pick this path, and re-counting here was a redundant full scan
-    * of the multi-million-row pair table. */
-  private def ccPropagateDistributed(s: SparkSession,
-      pairDf: DataFrame, edgeCount: Long): DataFrame = {
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.storage.StorageLevel
+  /** Above the driver bound: partition-local pre-contraction
+    * ([[CcKernels.spanningForest]]), one NARROW mapPartitions pass that
+    * replaces the dense edge multiset with each partition's spanning
+    * forest before anything shuffles. At the sf10 graph (27.5M
+    * hamming≤3 edges over ~500k touched docs, ~55 edges/doc) it keeps
+    * 616k edges at 4 cores, 793k at 32. The forest then goes to
+    * union-find when it fits the bound, else to the star loop. */
+  private def ccForest(s: SparkSession, pairDf: DataFrame,
+      threshold: Int): DataFrame = {
     import s.implicits._
-    val edges0 = pairDf.rdd.flatMap(r =>
-      Iterator((r.getLong(0), r.getLong(1)), (r.getLong(1), r.getLong(0))))
-    // same sizing rule as the star path: edge-volume scaled, floored
-    // at the cluster's parallelism
-    val nParts = math.max(1, math.min(400,
-      math.max(s.sparkContext.defaultParallelism, (edgeCount / 500000L).toInt)))
-    val part = new HashPartitioner(nParts)
-    val edges = edges0.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    // node labels, co-partitioned with edges by construction: after
-    // partitionBy every copy of a key is in one partition, so a
-    // per-partition Set dedupe is a full distinct
-    var labels: RDD[(Long, Long)] = edges.mapPartitions(it => {
-      val seen = scala.collection.mutable.HashSet.empty[Long]
-      it.foreach { case (srcId, _) => seen += srcId }
-      seen.iterator.map(n => (n, n))
-    }, preservesPartitioning = true).persist(StorageLevel.MEMORY_AND_DISK)
-    var changed = 1L
-    var rounds = 0
-    // Hard cap, surfaced on overrun: each call restarts labels from
-    // scratch, so exiting unconverged would silently emit coarser
-    // clusters than the exact-CC fixpoint the oracle computes. Rounds
-    // ≈ component diameter (small for near-dup clusters); at extreme
-    // scale the large-star/small-star variant would bound rounds at
-    // O(log n).
-    val maxRounds =
-      s.conf.get("spark.graft.cc.maxRounds", "1000").toInt
-    // the previous round's PERSISTED rdd (labels is just a mapValues
-    // view of it, so the view must never be the unpersist target)
-    var prevPersisted: RDD[_] = labels
-    try while (changed > 0 && rounds < maxRounds) {
-      StageRecorder.setIteration(s.sparkContext, rounds + 1)
-      // messages: min neighbor label arriving at each dst
-      val nbrMin = edges.join(labels)
-        .map { case (_, (dst, rep)) => (dst, rep) }
-        .reduceByKey(part, math.min(_, _))
-      // narrow: labels and nbrMin share `part`
-      val joined = labels.leftOuterJoin(nbrMin)
-        .mapValues { case (prev, m) =>
-          (prev, math.min(prev, m.getOrElse(prev))) }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // truncate lineage before the action so round N+1 never
-      // recomputes through round N
-      joined.localCheckpoint()
-      changed = joined.filter { case (_, (prev, next)) => prev != next }.count()
-      labels = joined.mapValues(_._2)
-      prevPersisted.unpersist(blocking = false)
-      prevPersisted = joined
-      rounds += 1
-    } finally StageRecorder.clearIteration(s.sparkContext)
-    if (changed != 0)
-      throw new IllegalStateException(
-        s"simhashClusters: min-label propagation not converged after " +
-          s"$maxRounds rounds ($changed labels still moving); raise " +
-          "spark.graft.cc.maxRounds")
-    val out = labels.toDF("doc_id", "rep")
-    edges.unpersist(blocking = false)
-    out
+    // The pair memo compresses brutally (sorted longs delta-encode:
+    // 27.5M edges ≈ 43 MB across 32 files), so the default 128 MB
+    // split packs the whole scan into 1-2 tasks and serializes the
+    // pass (measured 48 s vs ~4 s at one-task-per-file). Narrow the
+    // split confs only while the scan is planned: `Dataset.rdd` builds
+    // the physical plan, and with it the file splits, inside the
+    // window, so a query planned concurrently in this shared session
+    // could see the 1 MB splits for milliseconds at most. Per-file
+    // tasks keep the memo's id-clustered locality (which is what makes
+    // the local forests contract well), where a repartition would both
+    // shuffle the full edge multiset and destroy that locality. Each
+    // key is restored as it was, unset again when it was unset:
+    // getAll holds only the explicitly set keys, where get() reports a
+    // registered conf's default as if it had been set.
+    val narrowed = Map("spark.sql.files.maxPartitionBytes" -> "1m",
+      "spark.sql.files.openCostInBytes" -> "0")
+    val before = s.conf.getAll
+    narrowed.foreach { case (k, v) => s.conf.set(k, v) }
+    val pairs =
+      try pairDf.select(col("id1"), col("id2")).as[(Long, Long)].rdd
+      finally narrowed.keys.foreach { k =>
+        before.get(k).fold(s.conf.unset(k))(s.conf.set(k, _))
+      }
+    val forest = pairs.mapPartitions(CcKernels.spanningForest)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val fc = forest.count()
+    lastForestEdges = fc
+    if (fc <= threshold) {
+      val arr = forest.collect()
+      forest.unpersist(blocking = false)
+      lastStarRounds = 0
+      ccUnionFindLocal(s, arr)
+    } else ccStarRddLoop(s, forest, fc, threshold)
   }
+
+  /** Round cap of the star loop: only a guard against a fixpoint test
+    * that never fires, since star contraction takes O(log n) rounds
+    * (9 on a 100k-node path). */
+  private val MaxStarRounds = 1000
 
   /** Distributed connected components via alternating large-star /
     * small-star rounds (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SoCC'14) — the default scale path.
-    *
-    * Unlike min-label propagation, whose round count is the component
-    * DIAMETER (pathological on chain-shaped clusters), star rounds
-    * contract every component to a star rooted at its minimum node in
-    * O(log n) rounds:
+    * MapReduce and Beyond", SoCC'14) over a spanning forest too large
+    * for the driver. Unlike min-label propagation, whose round count
+    * is the component DIAMETER, star rounds contract every component
+    * to a star rooted at its minimum node in O(log n) rounds:
     *
     *   large-star: every node links its strictly-larger neighbors to
     *     the minimum of its closed neighborhood;
     *   small-star: every node links its smaller-or-equal neighbors
     *     (and itself) to that minimum.
     *
-    * Each half-round is one groupByKey shuffle over the current edge
-    * set on a fixed partitioner; lineage is truncated per round. The
-    * fixpoint is a star forest rooted at component minima — the same
-    * labeling as the union-find path and the oracle's recursive CTE. */
-  private def ccStarDistributed(s: SparkSession,
-      pairDf: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    import s.implicits._
-    // cap at MaxValue/2: the driver finish allocates a 2×edges long
-    // array, so a threshold past ~1.07B edges would overflow the
-    // allocation size before the collect OOMs
-    val finishThreshold = math.min(
-      s.conf.get("spark.graft.cc.localEdgeThreshold", "2000000").toLong,
-      Int.MaxValue / 2 - 1L).toInt
-    // Phase 0 — partition-local pre-contraction (CcKernels
-    // .spanningForest): one NARROW mapPartitions pass replaces the
-    // dense edge multiset with each partition's spanning forest before
-    // anything shuffles. At the sf10 graph (27.5M hamming≤3 edges over
-    // ~500k touched docs, ~55 edges/doc) this is a ~17× reduction in
-    // one pass over the parquet-backed pair set — the first large-star
-    // round then shuffles the forest, not the raw edges. Conf escape
-    // hatch for the convergence specs and A/B profiling.
-    val preContract =
-      s.conf.get("spark.graft.cc.preContract", "true").toBoolean
-    val (inputEdges, prePersisted) = if (preContract) {
-      val forest = pairDf.select(col("id1"), col("id2")).as[(Long, Long)]
-        .mapPartitions(it => CcKernels.spanningForest(it))
-        .toDF("id1", "id2")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // The pair memo compresses brutally (sorted longs delta-encode:
-      // 27.5M edges ≈ 43 MB across 32 files), so the default 128 MB
-      // split packs the whole scan into 1-2 tasks and serializes the
-      // pass (measured 48 s vs ~4 s at one-task-per-file). Narrow the
-      // split conf for THIS job only — per-file tasks keep the memo's
-      // id-clustered locality (which is what makes the local forests
-      // contract well), where a repartition would both shuffle the full
-      // edge multiset and destroy that locality. Confs are read at
-      // plan time: the persist is materialized inside the window.
-      val oldMax = s.conf.get("spark.sql.files.maxPartitionBytes")
-      val oldCost = s.conf.get("spark.sql.files.openCostInBytes", "4194304")
-      s.conf.set("spark.sql.files.maxPartitionBytes", "1m")
-      s.conf.set("spark.sql.files.openCostInBytes", "0")
-      // confs are read when the PHYSICAL plan is built — force that
-      // (queryExecution.toRdd) inside the narrow window and restore
-      // the session confs BEFORE the job runs, so the milliseconds of
-      // plan-building are the only time a concurrently-planned query
-      // in this shared session could pick up the 1 MB splits (the old
-      // form held the narrowed confs for the whole multi-second count)
-      val planned =
-        try forest.queryExecution.toRdd
-        finally {
-          s.conf.set("spark.sql.files.maxPartitionBytes", oldMax)
-          s.conf.set("spark.sql.files.openCostInBytes", oldCost)
-        }
-      val fc = planned.count()
-      if (finishThreshold > 0 && fc <= finishThreshold) {
-        val arr = forest.as[(Long, Long)].collect()
-        forest.unpersist(blocking = false)
-        lastStarRounds = 0
-        return ccUnionFindLocal(s, arr)
-      }
-      (forest, Option(forest))
-    } else (pairDf, Option.empty[DataFrame])
-    // Phase 1 — DataFrame large-star rounds. Each large-star preserves
-    // connectivity over the node set (Kiveris et al.'s lemma: every
-    // node is linked toward its closed-neighborhood minimum), and on
-    // dense near-dup graphs contracts geometrically (27.5M → 1.6M
-    // edges in one round at the sf10 graph). Running these first
-    // rounds through Catalyst instead of the RDD loop keeps the heavy
-    // shuffles in Tungsten binary format with whole-stage codegen —
-    // the RDD loop moves java-serialized boxed tuples, measured 78 s
-    // for the same single round the DataFrame form does in a few
-    // seconds. The RDD loop remains the convergence tail for graphs
-    // whose contracted residual still exceeds the driver bound
-    // (alternating large/small-star there guarantees O(log n)
-    // termination, which large-star alone does not).
-    if (finishThreshold > 0) {
-      val dfRounds = s.conf.get("spark.graft.cc.dfRounds", "4").toInt
-      var cur = inputEdges.select(col("id1"), col("id2"))
-      var persisted: Option[DataFrame] = prePersisted
-      // previous round's broadcast min-table: executor copies are
-      // dropped once the round that read it is superseded, but the
-      // driver copy must survive until the parallelize-backed finish —
-      // cache-loss recompute of the LIVE round's nxt walks the lineage
-      // back through every prior round's broadcast lookup
-      var prevBc: Option[org.apache.spark.broadcast.Broadcast[_]] = None
-      var rounds = 0
-      try while (rounds < dfRounds) {
-        StageRecorder.setIteration(s.sparkContext, rounds + 1)
-        // Large-star needs exactly ONE emission per edge: orienting
-        // (lo, hi) = (min, max), the only center that links anything
-        // through this edge is lo — it links hi to mm(lo), the minimum
-        // of lo's closed neighborhood. So the heavy join runs over the
-        // oriented edge set once (not the 2|E| bidirectional form);
-        // only the per-node min aggregation, which map-side-combines
-        // down to one row per node before its shuffle, reads both
-        // directions.
-        val e = cur.select(least(col("id1"), col("id2")).as("lo"),
-          greatest(col("id1"), col("id2")).as("hi"))
-        val m = e.select(col("lo").as("n"), col("hi").as("nbr"))
-          .union(e.select(col("hi").as("n"), col("lo").as("nbr")))
-          .groupBy(col("n"))
-          .agg(min(col("nbr")).as("mn"))
-          .select(col("n"), least(col("n"), col("mn")).as("mm"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // The min-table has one row per TOUCHED NODE — corpus-bounded
-        // and tiny relative to the edge set on dense near-dup graphs
-        // (500k nodes vs 27.5M edges at the sf10 graph). When it fits
-        // the broadcast gate, ship it as a sorted primitive-array map
-        // and turn the round's heavy step — the edges ⋈ min-table
-        // shuffle join over the full edge set — into a NARROW
-        // map-partition lookup: the round then shuffles only the
-        // per-node minima (map-side combined) and the contracted
-        // distinct output, never the raw edges. Same output as the
-        // join by construction (mm ≤ lo < hi, lookup is total on lo).
-        // Past the gate (billions of touched nodes at 100 TB) the
-        // shuffle join below remains the honest path — the same
-        // size-gated pattern as broadcast-vs-shuffle join selection.
-        val nNodes = m.count()
-        val bcastGate =
-          s.conf.get("spark.graft.cc.broadcastNodeThreshold", "8000000").toLong
-        var bcOpt: Option[org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Long])]] = None
-        val nxt = (if (nNodes <= bcastGate) {
-          val mm = m.as[(Long, Long)].collect().sortBy(_._1)
-          m.unpersist(blocking = false)
-          val keys = new Array[Long](mm.length)
-          val vals = new Array[Long](mm.length)
-          var i = 0
-          while (i < mm.length) { keys(i) = mm(i)._1; vals(i) = mm(i)._2; i += 1 }
-          val bc = s.sparkContext.broadcast((keys, vals))
-          bcOpt = Some(bc)
-          e.as[(Long, Long)].mapPartitions { it =>
-            val (ks, vs) = bc.value
-            it.map { case (lo, hi) =>
-              val j = java.util.Arrays.binarySearch(ks, lo)
-              (hi, if (j >= 0) vs(j) else lo)
-            }
-          }.toDF("id1", "id2").distinct()
-        } else {
-          e.join(m, col("lo") === col("n"))
-            .select(col("hi").as("id1"), col("mm").as("id2"))
-            .distinct()
-        }).persist(StorageLevel.MEMORY_AND_DISK)
-        val cnt = nxt.count()
-        if (bcOpt.isEmpty) m.unpersist(blocking = false)
-        // unpersist (not destroy): a lost cached partition of nxt can
-        // still recompute — the driver re-ships the broadcast value
-        bcOpt.foreach(_.unpersist(blocking = false))
-        rounds += 1
-        if (cnt <= finishThreshold) {
-          val arr = nxt.as[(Long, Long)].collect()
-          nxt.unpersist(blocking = false)
-          persisted.foreach(_.unpersist(blocking = false))
-          // out below is parallelize-backed — nothing depends on the
-          // broadcasts any more; destroy reclaims the driver copies too
-          prevBc.foreach(_.destroy())
-          bcOpt.foreach(_.destroy())
-          lastStarRounds = rounds
-          return ccUnionFindLocal(s, arr)
-        }
-        persisted.foreach(_.unpersist(blocking = false))
-        persisted = Some(nxt)
-        // the superseded round's broadcast is still REACHABLE through
-        // the live round's lineage: a lost cached partition of nxt(r)
-        // recomputes through nxt(r-1)'s mapPartitions, which reads
-        // bc(r-1) — destroy() would turn that recompute into a hard
-        // failure, so only drop the executor copies (the driver
-        // re-ships on demand; driver copies are bounded by the ~4
-        // rounds the gate allows and are destroyed in the
-        // parallelize-backed finish path, where nothing can recompute
-        // through them)
-        prevBc.foreach(_.unpersist(blocking = false))
-        prevBc = bcOpt
-        cur = nxt
-      } finally StageRecorder.clearIteration(s.sparkContext)
-      val out = ccStarRddLoop(s, cur, finishThreshold, rounds)
-      persisted.foreach(_.unpersist(blocking = false))
-      // same reachability argument: the RDD loop's output may retain
-      // lineage through cur's broadcast-lookup stage
-      prevBc.foreach(_.unpersist(blocking = false))
-      out
-    } else {
-      val out = ccStarRddLoop(s, inputEdges, finishThreshold, 0)
-      prePersisted.foreach(_.unpersist(blocking = false))
-      out
-    }
-  }
-
-  /** The RDD star-contraction loop — alternating large-star /
-    * small-star rounds on a fixed HashPartitioner until the edge set
-    * reproduces itself (or, mid-loop, fits the bounded driver finish).
-    * Reached only when the DataFrame contraction phase above leaves a
-    * residual larger than the driver bound (or is disabled for the
-    * convergence specs). */
-  private def ccStarRddLoop(s: SparkSession, pairDf: DataFrame,
-      finishThreshold: Int, priorRounds: Int): DataFrame = {
+    * Each half-round is one key shuffle on a fixed HashPartitioner.
+    * Every round is persisted and counted before its predecessor is
+    * released, and lineage is never truncated: a lost block is
+    * recomputed from its round's shuffle output (shuffle files outlive
+    * the released predecessor), where a local checkpoint would fail
+    * the query, and the O(log n) round count keeps the lineage short.
+    * The fixpoint is a star forest rooted at component minima — the
+    * same labeling as union-find and the oracle's recursive CTE.
+    * Takes ownership of `forest` (persisted, `edgeCount` edges). */
+  private def ccStarRddLoop(s: SparkSession, forest: RDD[(Long, Long)],
+      edgeCount: Long, threshold: Int): DataFrame = {
     import org.apache.spark.HashPartitioner
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.storage.StorageLevel
     import s.implicits._
-    val edgeCount = pairDf.count()
     // size by edge volume for the 100 TB end, but FLOOR at the
     // cluster's parallelism: a few-million-edge graph divided into
     // edges/500k partitions ran 5 tasks on a 32-core box (measured
@@ -882,27 +667,21 @@ object DedupQueries {
         if (v != mm) Iterator((v, mm)) else Iterator.empty
       }.union(m)
     }
-    // No initial distinct: both half-round outputs are distinct-ed
-    // below, the union-find finish dedups on the driver, and the
-    // convergence test only ever compares two distinct-ed sets — so a
-    // caller-supplied duplicate edge costs one emission, never
-    // correctness, and the full-width shuffle a global dedup of the
-    // input multiset would take is saved.
-    var edges: RDD[(Long, Long)] = pairDf.as[(Long, Long)].rdd
-      .map { case (a, b) => if (a > b) (a, b) else (b, a) }
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val maxRounds = s.conf.get("spark.graft.cc.maxRounds", "1000").toInt
+    // Edges stay oriented (larger, smaller): every forest edge is
+    // (node, its local root), and the root is the local minimum. No
+    // initial distinct: both half-round outputs are distinct-ed below,
+    // the union-find finish dedups on the driver, and the convergence
+    // test only ever compares two distinct-ed sets.
+    var edges = forest
     // The bounded-driver hybrid applies RECURSIVELY: each half-round
     // preserves connectivity over the same node set (Kiveris et al.'s
     // large-star/small-star lemmas — every surviving node keeps or
     // receives a link into its component), so once a contracted edge
-    // set fits the driver bound, union-find finishes the job. Dense
-    // graphs contract geometrically (27.5M → 389k edges in ONE
-    // large-star at the sf10 graph), so the check runs after EACH
-    // half-round and usually fires before a single small-star pass.
-    // Set spark.graft.cc.localEdgeThreshold=0 to force the pure
-    // distributed loop (the specs do, to exercise convergence).
-    var rounds = priorRounds
+    // set fits the driver bound, union-find finishes the job. The
+    // check runs after EACH half-round. A bound of 0 never fires it
+    // (a non-empty graph keeps a non-empty star edge set), which is
+    // how the specs run the loop to its fixpoint.
+    var rounds = 0
     var converged = false
     var prevCount = -1L // previous round's (distinct) edge count
     def finishLocally(residual: RDD[(Long, Long)],
@@ -912,44 +691,33 @@ object DedupQueries {
       lastStarRounds = rounds
       ccUnionFindLocal(s, arr)
     }
-    try while (!converged && rounds < maxRounds) {
-      StageRecorder.setIteration(s.sparkContext, rounds + 1)
-      val half =
-        if (finishThreshold > 0) {
-          val ls = largeStar(edges).distinct(nParts)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          ls.localCheckpoint()
-          val lsCount = ls.count()
-          if (lsCount <= finishThreshold) {
-            rounds += 1
-            return finishLocally(ls, Seq(edges, ls))
-          }
-          ls
-        } else largeStar(edges)
-      val next = smallStar(half).distinct(nParts)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      next.localCheckpoint()
-      val nextCount = next.count()
+    try while (!converged && rounds < MaxStarRounds) {
       rounds += 1
-      if (finishThreshold > 0 && nextCount <= finishThreshold)
-        return finishLocally(next, Seq(edges, half, next))
+      StageRecorder.setIteration(s.sparkContext, rounds)
+      val ls = largeStar(edges).distinct(nParts)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      if (ls.count() <= threshold)
+        return finishLocally(ls, Seq(edges, ls))
+      val next = smallStar(ls).distinct(nParts)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val nextCount = next.count()
+      if (nextCount <= threshold)
+        return finishLocally(next, Seq(edges, ls, next))
       // fixpoint: the (already deduplicated) star edge set reproduces
       // itself — compare as sets via one subtract on the co-partitioned
       // layout plus a count (the subtract only runs once counts agree;
-      // the first round has no distinct-ed predecessor and never
-      // converges)
+      // the first round's input is not distinct-ed and never converges)
       converged = prevCount >= 0 && nextCount == prevCount &&
         next.subtract(edges, part).isEmpty()
-      val prev = edges
+      edges.unpersist(blocking = false)
+      ls.unpersist(blocking = false)
       edges = next
       prevCount = nextCount
-      prev.unpersist(blocking = false)
-      half.unpersist(blocking = false) // no-op when the half wasn't persisted
     } finally StageRecorder.clearIteration(s.sparkContext)
     if (!converged)
       throw new IllegalStateException(
-        s"simhashClusters: star contraction not converged after " +
-          s"$maxRounds rounds; raise spark.graft.cc.maxRounds")
+        s"connectedComponents: star contraction not converged after " +
+          s"$MaxStarRounds rounds")
     lastStarRounds = rounds
     // converged star forest: (node → component min) for every non-root;
     // roots label themselves

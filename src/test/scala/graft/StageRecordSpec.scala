@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.GraphQueries
+import graft.operators.{DedupQueries, GraphQueries}
 
 /** The per-row layer record Bench writes into `bench_full.json`: two
   * rows run through Bench's row wrapper (the converged PageRank loop,
@@ -32,6 +32,8 @@ class StageRecordSpec extends AnyFunSuite {
         iters = cr.iters
         cr.ranks.count()
         cr.release()
+        // later suites look for cached PageRank blocks by name
+        GraphQueries.releaseAdjacency(spark, dir)
       }
     val (_, qOut, q) = Bench.timedRepeat(recorder, spark, "q1_pricing_summary") {
       SparkEntry.queries("q1_pricing_summary")(spark, dir).count()
@@ -62,6 +64,29 @@ class StageRecordSpec extends AnyFunSuite {
     assert(j.get("iterations").size == iters)
     assert(j.get("stages").get(0).has("run_ms"))
     assert(j.get("actions").get(0).has("phases_ms"))
+  }
+
+  test("a CC run through the star loop tags rounds 1..lastStarRounds only") {
+    import org.apache.spark.sql.functions.col
+    // a 20k-node path: bound 0 sends it through the star loop
+    val pairDf = spark.range(19999)
+      .select(col("id").as("id1"), (col("id") + 1).as("id2"))
+    withRecorder { recorder =>
+      val (_, out, p) =
+        SparkTestUtil.withConf(spark, "spark.graft.cc.localEdgeThreshold", "0") {
+          Bench.timedRepeat(recorder, spark, "cc_star") {
+            DedupQueries.ccForTest(spark, pairDf, "star").count()
+          }
+        }
+      val rounds = DedupQueries.lastStarRounds
+      assert(out.isRight && p.complete)
+      assert(rounds > 1, rounds)
+      assert(p.iterations.map(_.iteration) == (1 to rounds))
+      assert(p.iterations.forall(_.stages > 0))
+      // the forest pass before the loop and the count after it
+      assert(p.stages.exists(_.iteration.isEmpty), p.stages)
+      assert(spark.sparkContext.getLocalProperty(StageRecorder.IterationKey) == null)
+    }
   }
 
   test("no stage is recorded under two rows") {

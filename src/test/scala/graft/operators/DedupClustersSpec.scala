@@ -1,13 +1,17 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, SparkTestUtil}
 
-/** The three connected-components paths (driver union-find under the
-  * size threshold; above it, large/small-star contraction by default
-  * or co-partitioned RDD min-label propagation) must reach the
-  * identical fixpoint — clusters are algorithm-independent. */
+/** The connected-components paths (driver union-find under the edge
+  * bound; above it, a spanning-forest pass whose forest goes to
+  * union-find when it fits and to the large/small-star loop when it
+  * does not) must reach the identical fixpoint — clusters are
+  * algorithm-independent — and the star loop must survive losing its
+  * cached blocks. */
 class DedupClustersSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
@@ -18,29 +22,41 @@ class DedupClustersSpec extends AnyFunSuite {
     DedupQueries.simhashClusters(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
 
-  test("union-find, star contraction, and propagation agree exactly") {
+  private def run(pairDf: DataFrame, path: String): Seq[(Long, Long)] =
+    DedupQueries.ccForTest(spark, pairDf, path)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+
+  /** Bound 0 sends every non-empty graph through the star loop to its
+    * fixpoint: neither the forest nor any round fits the driver. */
+  private def withPureStar[T](body: => T): T =
+    SparkTestUtil.withConf(spark, thresholdKey, "0")(body)
+
+  /** `local`, `star` at bound 0 and `star` at the default bound (the
+    * forest, then union-find) all label `pairDf` alike. */
+  private def assertPathsAgree(pairDf: DataFrame, what: String): Seq[(Long, Long)] = {
+    val local = run(pairDf, "local")
+    assert(withPureStar(run(pairDf, "star")) === local, s"$what: star loop diverged")
+    assert(DedupQueries.lastStarRounds > 0, s"$what: the star loop never ran")
+    assert(run(pairDf, "star") === local, s"$what: forest + union-find diverged")
+    assert(DedupQueries.lastForestEdges > 0 && DedupQueries.lastStarRounds === 0,
+      s"$what: the forest did not finish in union-find")
+    local
+  }
+
+  private def hammingPairDf: DataFrame =
+    DedupQueries.hammingPairs(spark, dir).select(col("id1"), col("id2"))
+
+  test("union-find and star contraction agree exactly on fixture pairs") {
     val viaQuery = clusters()
     assert(viaQuery.nonEmpty)
     // sanity: at least one real (multi-doc) cluster exists at sf0.001
     assert(viaQuery.exists { case (doc, rep) => doc != rep },
       "fixture produced no non-trivial clusters")
-    // the three paths must run on the REAL pair set through ccForTest:
-    // re-calling simhashClusters under forced confs (the old form of
-    // this test) hit the per-session output memo and compared the
-    // first run's parquet with itself — the conf never reached the
-    // path selection and "propagate" had no executing test at all
-    val pairDf = DedupQueries.hammingPairs(spark, dir)
-      .select(org.apache.spark.sql.functions.col("id1"),
-        org.apache.spark.sql.functions.col("id2"))
-    def run(path: String): Seq[(Long, Long)] =
-      DedupQueries.ccForTest(spark, pairDf, path)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val local = run("local")
-    spark.conf.set(thresholdKey, "0") // pure distributed loop
-    try {
-      assert(run("star") === local, "star diverged from union-find")
-      assert(run("propagate") === local, "propagate diverged from union-find")
-    } finally spark.conf.unset(thresholdKey)
+    // the paths must run on the REAL pair set through ccForTest:
+    // re-calling simhashClusters under forced confs hits the
+    // per-session output memo and compares the first run's parquet
+    // with itself
+    val local = assertPathsAgree(hammingPairDf, "sf0.001 hamming pairs")
     // and the end-to-end memoized labels agree with CC over their own
     // pair set for every pair-covered doc (singletons label themselves
     // upstream of CC)
@@ -55,18 +71,8 @@ class DedupClustersSpec extends AnyFunSuite {
     * O(diameter) rounds, which on a 100k-node path is 100k shuffles.
     * Prove the claim: one path graph, convergence in ≲ 20 rounds, and
     * the same labeling union-find produces. */
-  /** Forcing threshold 0 disables the recursive bounded-collect
-    * finish, so these two tests exercise the PURE distributed loop —
-    * the form that runs when even the contracted residual exceeds the
-    * driver bound. */
-  private def withPureStar[T](body: => T): T = {
-    spark.conf.set(thresholdKey, "0")
-    try body finally spark.conf.unset(thresholdKey)
-  }
-
   test("100k-node path graph: star contraction converges in O(log n) rounds") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val n = 100000
     // path 0-1-2-...-(n-1): a single component rooted at 0, diameter n
     val pairDf = spark.range(n - 1)
@@ -96,61 +102,60 @@ class DedupClustersSpec extends AnyFunSuite {
         (a, b)
       }.filter { case (a, b) => a != b }
       val edges = (chain ++ rand).distinct
-      val pairDf = edges.toDF("id1", "id2")
-      val expected = DedupQueries.ccForTest(spark, pairDf, "local")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-      val got = withPureStar {
-        DedupQueries.ccForTest(spark, pairDf, "star")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-      }
-      assert(got === expected, s"trial $trial (n=$n) diverged")
-      // min-label propagation on the same random graph
-      val prop = DedupQueries.ccForTest(spark, pairDf, "propagate")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-      assert(prop === expected, s"trial $trial (n=$n) propagate diverged")
-      // the recursive hybrid (star rounds + bounded union-find finish,
-      // the default-threshold path) must reach the same fixpoint
-      val hybrid = DedupQueries.ccForTest(spark, pairDf, "star")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-      assert(hybrid === expected, s"trial $trial (n=$n) hybrid diverged")
-      // the DF large-star round picks broadcast-map vs shuffle-join by
-      // the min-table's node count; force the join fallback (the
-      // >gate form that runs when the touched-node set outgrows the
-      // broadcast bound at 100 TB) and require the same fixpoint.
-      // Pre-contraction is disabled here: with it on, small graphs
-      // finish in the phase-0 union-find before any DF round runs.
-      spark.conf.set("spark.graft.cc.broadcastNodeThreshold", "0")
-      spark.conf.set("spark.graft.cc.preContract", "false")
-      try {
-        val joined = DedupQueries.ccForTest(spark, pairDf, "star")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-        assert(joined === expected, s"trial $trial (n=$n) join-path diverged")
-      } finally {
-        spark.conf.unset("spark.graft.cc.broadcastNodeThreshold")
-        spark.conf.unset("spark.graft.cc.preContract")
-      }
-      // the pure distributed loop with pre-contraction DISABLED (the
-      // conf escape hatch) must also reach the fixpoint — pins that
-      // correctness never depends on phase 0 running
-      spark.conf.set("spark.graft.cc.preContract", "false")
-      try {
-        val noPre = withPureStar {
-          DedupQueries.ccForTest(spark, pairDf, "star")
-            .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-        }
-        assert(noPre === expected, s"trial $trial (n=$n) no-pre diverged")
-        // and WITHOUT withPureStar: default localEdgeThreshold keeps
-        // the DF large-star rounds in play, and the default (high)
-        // broadcastNodeThreshold selects the broadcast-min-table
-        // lookup branch — the production path for forests above the
-        // driver bound, which no other variant executes (pre-contract
-        // finishes small graphs in phase 0, the join-fallback block
-        // forces the gate to 0, withPureStar skips DF rounds)
-        val bmap = DedupQueries.ccForTest(spark, pairDf, "star")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-        assert(bmap === expected,
-          s"trial $trial (n=$n) broadcast-map path diverged")
-      } finally spark.conf.unset("spark.graft.cc.preContract")
+      assertPathsAgree(edges.toDF("id1", "id2"), s"trial $trial (n=$n)")
     }
+  }
+
+  /** A path over shuffled node ids, its edges in random order: every
+    * partition's forest is a scatter of short fragments, so the star
+    * loop needs several rounds. */
+  private def scrambledPath(n: Int): DataFrame = {
+    import spark.implicits._
+    val rng = new scala.util.Random(20261017L)
+    val ids = rng.shuffle((0 until n).map(_.toLong * 13 + 5))
+    rng.shuffle(ids.sliding(2).map(w => (w(0), w(1))).toSeq).toDF("id1", "id2")
+  }
+
+  test("losing the star loop's cached blocks after round 2 changes nothing") {
+    val pairDf = scrambledPath(20000)
+    val want = run(pairDf, "local")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (got, dropped) = withPureStar {
+      SparkTestUtil.dropBlocksAfterIteration(spark, 2, r => !before(r.id)) {
+        run(pairDf, "star")
+      }
+    }
+    assert(dropped.nonEmpty, "the loop's blocks were never dropped")
+    assert(DedupQueries.lastStarRounds > 2, "the loop ended before round 3 read the lost blocks")
+    assert(got === want)
+  }
+
+  test("the forest pass leaves the session confs as it found them") {
+    // a fresh session: no earlier suite has set the split confs there
+    val fresh = spark.newSession()
+    val before = fresh.conf.getAll
+    assert(!before.contains("spark.sql.files.maxPartitionBytes"))
+    // read in the fresh session, so the scan is planned under its confs
+    val pairDf = fresh.read.parquet(hammingPairDf.inputFiles: _*)
+    DedupQueries.ccForTest(fresh, pairDf, "star").count()
+    assert(DedupQueries.lastForestEdges > 0, "the forest pass did not run")
+    assert(fresh.conf.getAll === before)
+  }
+
+  test("a non-integer localEdgeThreshold fails naming the key") {
+    val e = SparkTestUtil.withConf(spark, thresholdKey, "abc") {
+      intercept[IllegalArgumentException](
+        DedupQueries.connectedComponents(spark, hammingPairDf))
+    }
+    assert(e.getMessage.contains(thresholdKey) && e.getMessage.contains("abc"), e.getMessage)
+  }
+
+  test("a negative localEdgeThreshold fails naming the key") {
+    val e = SparkTestUtil.withConf(spark, thresholdKey, "-5") {
+      intercept[IllegalArgumentException](
+        DedupQueries.connectedComponents(spark, hammingPairDf))
+    }
+    assert(e.getMessage.contains(thresholdKey) && e.getMessage.contains("-5"), e.getMessage)
   }
 }

@@ -2,11 +2,9 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.GraftTestBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkTestSession, StageRecorder}
+import graft.{SparkTestSession, SparkTestUtil}
 
 /** The packed PageRank loop against the join fallback it replaced
   * (forced with spark.graft.pagerank.broadcastNodesMax=0), on seeded
@@ -122,26 +120,9 @@ class PageRankPackedSpec extends AnyFunSuite {
     GraphQueries.releaseAdjacency(spark, dir)
     val want = converged()
     GraphQueries.releaseAdjacency(spark, dir)
-    @volatile var removed = Seq.empty[Int]
-    val loss = new SparkListener {
-      private var lastOfIteration5 = -1
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(StageRecorder.IterationKey) == "5"))
-          lastOfIteration5 = e.jobId
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == lastOfIteration5 && removed.isEmpty) {
-          removed = sc.getPersistentRDDs.values
-            .filter(_.name.startsWith("pagerank-csr")).map(_.id).toSeq
-          removed.foreach(GraftTestBridge.removeRddBlocks)
-        }
-    }
-    sc.addSparkListener(loss)
-    val got =
-      try converged()
-      finally {
-        GraftTestBridge.drainListenerBus(sc)
-        sc.removeSparkListener(loss)
-      }
+    // an iteration is one job, so the blocks are dropped once
+    val (got, removed) = SparkTestUtil.dropBlocksAfterIteration(spark, 5,
+      r => Option(r.name).exists(_.startsWith("pagerank-csr")))(converged())
     try {
       assert(removed.size === 1, "the loop's blocks were never removed")
       assert(got === want)
