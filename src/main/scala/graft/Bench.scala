@@ -22,16 +22,14 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // split-size override for local profiling (A/B'd at 4m vs the
-      // 128m default: smaller splits parallelize single-file kernel
-      // scans slightly but cost more on the iterative CC queries, so
-      // the default stands)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_SPLIT_BYTES", "128m"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The corpus the benches read: SPARK_GRAFT_SF_DIR, default sf0.1. */
+  private[graft] def sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
   /** History-tripwire ratio threshold for a row whose checked-in
     * history is `histPrev` seconds. Multi-second rows get the TIGHT
@@ -79,7 +77,7 @@ object Bench {
     require(repeats >= 1, s"repeats must be >= 1, got $repeats")
     val spark = session()
     runLeg(spark, matches, repeats,
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
+      sfDir,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json"),
       filtered = tokens.nonEmpty)
     spark.stop()
@@ -313,15 +311,7 @@ object Bench {
     // two rounds' driver totals moved with the box, not the code
     // (r10 drifted ~14% and needed a hand A/B to attribute); the
     // probe gives cross-round comparisons a same-box denominator.
-    def calibProbe(): Double = {
-      val t0 = System.nanoTime()
-      spark.sparkContext.range(0L, 10000000L, 1, numSlices = 32)
-        .map(i => (i * 2654435761L) % 999999937L)
-        .sortBy(identity)
-        .count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val calibSec = calibProbe()
+    val calibSec = StreamGuard.probe(spark, 10000000L)
     System.err.println(f"[bench] calibration probe: $calibSec%.3f s")
     // Absolute degradation limit for the fixed probe: healthy runs of
     // this box measure 3.8-5.2 s; an r14 sweep starting at 22.6 s (6x,
@@ -330,8 +320,7 @@ object Bench {
     // rows up to 30x their history. The probe is the only meter that
     // sees that class, so past the limit the sweep self-reports
     // flagged. Override per box via SPARK_GRAFT_CALIB_LIMIT.
-    val calibLimit = sys.env.getOrElse("SPARK_GRAFT_CALIB_LIMIT", "10.0")
-      .toDouble
+    val calibLimit = StreamGuard.limitFromEnv("SPARK_GRAFT_CALIB_LIMIT", 10.0)
 
     // Mid-leg probes: r14 proved the start/end probes leave a BLIND
     // WINDOW — a degradation that begins after the start probe and
@@ -344,17 +333,8 @@ object Bench {
     // Any mid probe past limit/5 folds into coload.flagged, so a
     // contaminated sweep self-reports even when both end probes are
     // clean.
-    def miniCalibProbe(): Double = {
-      val t0 = System.nanoTime()
-      spark.sparkContext.range(0L, 2000000L, 1, numSlices = 32)
-        .map(i => (i * 2654435761L) % 999999937L)
-        .sortBy(identity)
-        .count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val calibMidLimit =
-      sys.env.get("SPARK_GRAFT_CALIB_MID_LIMIT").map(_.toDouble)
-        .getOrElse(calibLimit / 5.0)
+    val calibMidLimit = StreamGuard.limitFromEnv(
+      "SPARK_GRAFT_CALIB_MID_LIMIT", calibLimit / 5.0)
     def family(n: String): String = {
       val p = n.takeWhile(_ != '_')
       if (p.matches("q\\d+")) "q" else if (p.matches("e\\d*")) "e" else p
@@ -411,17 +391,6 @@ object Bench {
     // box's real core count — SPARK_GRAFT_CPUS sizes only the Spark
     // master/partitions and may legitimately differ from it
     val hostCpus = Runtime.getRuntime.availableProcessors()
-    // host-level counters the per-process meter cannot see: CPU STEAL
-    // (a co-tenant VM taking the physical core — the classic invisible
-    // contention on a Firecracker guest) and IO-wait. Returns (steal,
-    // iowait) cumulative ticks from /proc/stat's aggregate cpu line.
-    def hostStealIo(): (Long, Long) =
-      try {
-        val f = scala.io.Source.fromFile("/proc/stat")
-        val cpu = try f.getLines().next() finally f.close()
-        val t = cpu.trim.split("\\s+") // cpu user nice sys idle iowait irq sirq steal
-        (t(8).toLong, t(5).toLong)
-      } catch { case _: Throwable => (-1L, -1L) }
     def otherJvmCpuTicks(): Map[Long, Long] = {
       val self = ProcessHandle.current().pid()
       val procs = Option(new java.io.File("/proc").listFiles())
@@ -454,7 +423,7 @@ object Bench {
     }
     val loadBefore = loadavg1()
     val jvmsBefore = otherJvmCpuTicks()
-    val (stealBefore, iowaitBefore) = hostStealIo()
+    val (stealBefore, iowaitBefore) = StreamGuard.hostStealIo()
     val sweepStartNs = System.nanoTime()
 
     val timedNames = (SparkEntry.queries ++ extraQueries).keySet
@@ -488,7 +457,7 @@ object Bench {
       .map { case (name, entryFn) =>
       val fam = family(name)
       if (prevFamily != null && fam != prevFamily) {
-        val t = miniCalibProbe()
+        val t = StreamGuard.probe(spark)
         midProbes += fam -> t
         if (t > calibMidLimit)
           System.err.println(f"[bench] WARNING: mid-leg probe before " +
@@ -511,7 +480,7 @@ object Bench {
       // localizes a mid-sweep host event to the rows it actually hit
       // (the first r13 sf10 sweep lost exactly q15–q18 to one such
       // event and needed a standalone re-measure to prove it)
-      val (rowSteal0, _) = hostStealIo()
+      val (rowSteal0, _) = StreamGuard.hostStealIo()
       val rowStartNs = System.nanoTime()
       while (rep < planned) {
         rep += 1
@@ -577,7 +546,7 @@ object Bench {
       // the self-extending fast-row policy above makes the count
       // row-dependent, and the artifact must say which policy measured
       // each row
-      val (rowSteal1, _) = hostStealIo()
+      val (rowSteal1, _) = StreamGuard.hostStealIo()
       val rowStealFrac =
         if (rowSteal0 < 0 || rowSteal1 < 0) 0.0
         else {
@@ -606,7 +575,7 @@ object Bench {
       if (ok && !skipped && warmthComparable &&
           histPrev >= 0.3 && sec > tripRatio * histPrev) {
         val ratio = sec / histPrev
-        val probe = miniCalibProbe()
+        val probe = StreamGuard.probe(spark)
         historyTrips += ((name, ratio, probe))
         // machine-readable marker FIRST — external harnesses
         // (tools/tripwire_demo.sh) key off this line, not the prose
@@ -627,7 +596,7 @@ object Bench {
     recorder.unregister(spark)
     val loadAfter = loadavg1()
     val jvmsAfter = otherJvmCpuTicks()
-    val (stealAfter, iowaitAfter) = hostStealIo()
+    val (stealAfter, iowaitAfter) = StreamGuard.hostStealIo()
     val stealSec =
       if (stealBefore < 0 || stealAfter < 0) -1.0
       else (stealAfter - stealBefore) / 100.0
@@ -649,7 +618,7 @@ object Bench {
     // end-of-sweep probe: catches degradation that began MID-sweep
     // (the start probe alone passed a sweep whose later rows ran on a
     // 6x-degraded host)
-    val calibEndSec = calibProbe()
+    val calibEndSec = StreamGuard.probe(spark, 10000000L)
     System.err.println(f"[bench] calibration probe (end): $calibEndSec%.3f s")
     val calibMidMax = if (midProbes.isEmpty) 0.0 else midProbes.map(_._2).max
     val calibFlag = calibSec > calibLimit || calibEndSec > calibLimit ||

@@ -186,14 +186,8 @@ object ReconfigBench {
       val wasSettling = controller.settlingNow
       val acted = loop.tick().isDefined
       val u = controller.lastMaxUtil
-      val freshPs = collector.progressesFrom(seen)
-      val freshN = freshPs.size
+      val freshN = collector.progressesFrom(seen).size
       seen += freshN
-      if (sys.env.contains("GRAFT_SS_DEBUG"))
-        System.err.println(s"[ss] tick fresh=$freshN " +
-          freshPs.map(p => s"b${p.batchId}:" +
-            s"rows=${p.numInputRows}:inRps=${p.inputRowsPerSecond.toInt}:" +
-            s"dur=${p.durationMs}").mkString(" "))
       if (u >= 0) utils += u
       // convergence = the policy is quiet AND the measured bottleneck
       // sits inside the utilization band on consecutive clean windows.
@@ -252,14 +246,7 @@ object ReconfigBench {
     val remapSec = args.lift(4).map(_.toInt).getOrElse(10)
     val outFile = args.lift(5)
     val stateBytes = args.lift(6).map(_.toInt).getOrElse(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     val lines = mode match {
       case "pinned" => Seq(
         runMode(spark, pinned = true, rate, nKeys, seconds, remapSec, stateBytes))

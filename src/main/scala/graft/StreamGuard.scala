@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Host-calibration guard for the STREAMING bench mains — the batch
+/** Host-calibration guard for the STREAMING bench legs — the batch
   * sweep's probe + history-tripwire discipline ported to the rate
   * harnesses (the r15 verdict's #1: the streaming suite was the only
   * gate surface that could not self-certify; its r15 re-record read
@@ -33,7 +33,7 @@ import org.apache.spark.sql.SparkSession
   *    streaming rates are 45 s means, percent-scale noisy like the
   *    >=30 s batch rows, not the 3x-noisy sub-second ones.
   *
-  * Every leg's JSON gains a "guard" object with a `flagged` bool, so a
+  * Every leg's record gains a "guard" object with a `flagged` bool, so a
   * contaminated streaming record announces itself instead of needing
   * the r15 footnote ("the host ran slow that day... it cannot PROVE
   * it"). */
@@ -44,44 +44,50 @@ object StreamGuard {
   final case class Stamp(name: String, probeStartSec: Double,
       probeEndSec: Double, probeLimit: Double, stealSec: Double,
       stealFrac: Double, historyRps: Double, historyRatio: Double,
-      tripProbeSec: Double, flagged: Boolean) {
-    def json: String = {
-      def n(v: Double) =
-        String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-      s"""{"name":"$name","probe_start_sec":${n(probeStartSec)},""" +
-        s""""probe_end_sec":${n(probeEndSec)},""" +
-        s""""probe_limit":${n(probeLimit)},"steal_sec":${n(stealSec)},""" +
-        s""""steal_frac":${n(stealFrac)},""" +
-        s""""history_rps":${n(historyRps)},""" +
-        s""""history_ratio":${n(historyRatio)},""" +
-        s""""trip_probe_sec":${n(tripProbeSec)},"flagged":$flagged}"""
-    }
-  }
+      tripProbeSec: Double, flagged: Boolean)
 
-  /** The batch sweep's 1/5-scale calibration workload verbatim
-    * ([[Bench]]'s mini-probe): fixed, shuffle-bound, query-code-free —
-    * the only meter that sees the host's degraded first-touch
-    * fault path, which leaves steal/iowait/majfault all reading zero. */
-  def probe(spark: SparkSession): Double = {
+  /** The calibration workload the batch sweep and every streaming leg
+    * time: fixed, shuffle-bound, query-code-free — the only meter that
+    * sees the host's degraded first-touch fault path, which leaves
+    * steal/iowait/majfault all reading zero. The 2M-row default is the
+    * batch sweep's 1/5-scale mini-probe (~0.3-1 s healthy on this box);
+    * [[Bench]] times 10M rows at the start and end of a sweep. */
+  def probe(spark: SparkSession, rows: Long = 2000000L): Double = {
     val t0 = System.nanoTime()
-    spark.sparkContext.range(0L, 2000000L, 1, numSlices = 32)
+    spark.sparkContext.range(0L, rows, 1, numSlices = 32)
       .map(i => (i * 2654435761L) % 999999937L)
       .sortBy(identity)
       .count()
     (System.nanoTime() - t0) / 1e9
   }
 
-  def probeLimit: Double =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PROBE_LIMIT", "2.0").toDouble
+  /** A probe limit in seconds from env var `name`, `default` when unset.
+    * Anything but a positive finite number fails naming the variable:
+    * `p > NaN` is false for every probe, so a NaN or infinite limit
+    * would switch the guard off without a word. */
+  private[graft] def limitFromEnv(name: String, default: Double,
+      env: Map[String, String] = sys.env): Double =
+    env.get(name).fold(default) { raw =>
+      val v = raw.trim.toDoubleOption.getOrElse(Double.NaN)
+      require(v > 0 && !v.isInfinite,
+        s"$name must be a positive finite number of seconds, but was '$raw'")
+      v
+    }
 
-  /** Cumulative hypervisor-steal ticks (USER_HZ = 100) from
-    * /proc/stat's aggregate cpu line; -1 when unreadable. */
-  private def stealTicks(): Long =
+  def probeLimit: Double = limitFromEnv("SPARK_GRAFT_STREAM_PROBE_LIMIT", 2.0)
+
+  /** Cumulative hypervisor-steal and IO-wait ticks (USER_HZ = 100) from
+    * /proc/stat's aggregate cpu line — host-level counters the
+    * per-process meters cannot see (a co-tenant VM taking the physical
+    * core is the classic invisible contention on a Firecracker guest);
+    * (-1, -1) when unreadable. */
+  def hostStealIo(): (Long, Long) =
     try {
       val f = scala.io.Source.fromFile("/proc/stat")
       val cpu = try f.getLines().next() finally f.close()
-      cpu.trim.split("\\s+")(8).toLong
-    } catch { case _: Throwable => -1L }
+      val t = cpu.trim.split("\\s+") // cpu user nice sys idle iowait irq sirq steal
+      (t(8).toLong, t(5).toLong)
+    } catch { case _: Throwable => (-1L, -1L) }
 
   /** Best healthy rows/s per leg from the checked-in history file
     * (refreshed each round from the latest guard-clean record). Flat
@@ -110,7 +116,7 @@ object StreamGuard {
   // first-touch of the sort path — measured 3.8 s vs 0.5-0.8 s steady
   // on a healthy box), which would flag leg 1 of every suite on probe
   // noise. One discarded warm-up probe per CONTEXT (not per JVM —
-  // StreamBenchAll rebuilds the SparkSession between suites, and each
+  // StreamBench rebuilds the SparkSession between legs, and each
   // rebuilt context's first probe re-pays scheduler/codegen warm-up
   // for rebuild reasons unrelated to host health) pays that cost
   // untimed; the host-health reading starts from the second probe,
@@ -134,11 +140,11 @@ object StreamGuard {
       System.err.println(f"[stream-guard] WARNING: pre-leg probe for " +
         f"'$name' read $p0%.3f s (limit $limit%.1f) — host degraded; " +
         "this leg will self-report flagged")
-    val s0 = stealTicks()
+    val (s0, _) = hostStealIo()
     val t0 = System.nanoTime()
     val result = run
     val wallSec = (System.nanoTime() - t0) / 1e9
-    val s1 = stealTicks()
+    val (s1, _) = hostStealIo()
     val p1 = probe(spark)
     if (p1 > limit)
       System.err.println(f"[stream-guard] WARNING: post-leg probe for " +

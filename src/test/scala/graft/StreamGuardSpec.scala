@@ -14,14 +14,14 @@ class StreamGuardSpec extends AnyFunSuite {
 
   test("checked-in stream history parses to positive per-leg rates") {
     val h = StreamGuard.history
-    // the repo file must keep the tripwire armed for the whole suite
-    val expected = Seq("micro_1k", "micro_10k", "micro_100k",
-      "er_stream", "rules_tws", "rules_foreach_batch", "order_tws",
-      "order_tws_warm", "order_fmgws", "nexmark_q1_currency",
-      "nexmark_q3_join")
-    expected.foreach { k =>
+    val legs = StreamBench.legs.map(_.name)
+    // the repo file must keep the tripwire armed for every leg...
+    legs.foreach { k =>
       assert(h.get(k).exists(_ > 0), s"missing/zero history for $k")
     }
+    // ...and hold no rate that no leg can ever be checked against
+    assert(h.keySet.subsetOf(legs.toSet),
+      s"history names no leg: ${h.keySet -- legs}")
   }
 
   test("history parser is scoped to the rates object") {
@@ -56,10 +56,11 @@ class StreamGuardSpec extends AnyFunSuite {
     // 1e9 rows/s has no history entry: ratio 0, no trip probe ran
     assert(stamp.historyRps == 0.0 && stamp.tripProbeSec == -1.0)
     assert(stamp.probeStartSec > 0 && stamp.probeEndSec > 0)
-    // stamp JSON is machine-parseable and carries the flag verbatim
-    val j = stamp.json
-    assert(j.contains("\"name\":\"spec_leg\"") &&
-      j.contains(s""""flagged":${stamp.flagged}"""), j)
+    // the stamp's JSON parses back and carries the flag verbatim
+    val j = Json.mapper.readTree(Json.mapper.writeValueAsString(stamp))
+    assert(j.get("name").asText == "spec_leg", j)
+    assert(j.get("flagged").isBoolean &&
+      j.get("flagged").asBoolean == stamp.flagged, j)
   }
 
   test("a leg far under its history fires the trip probe") {
@@ -71,12 +72,42 @@ class StreamGuardSpec extends AnyFunSuite {
     }(_ => 1.0)
     assert(stamp.historyRps > 0)
     assert(stamp.tripProbeSec >= 0.0,
-      s"trip probe did not run: ${stamp.json}")
+      s"trip probe did not run: $stamp")
     // flag semantics: a clean trip probe alone must NOT flag the leg
     if (stamp.probeStartSec <= stamp.probeLimit &&
         stamp.probeEndSec <= stamp.probeLimit &&
         stamp.tripProbeSec <= stamp.probeLimit &&
         stamp.stealFrac <= 0.05)
-      assert(!stamp.flagged, s"clean probes but flagged: ${stamp.json}")
+      assert(!stamp.flagged, s"clean probes but flagged: $stamp")
+  }
+
+  test("a probe limit env var defaults when unset and reads a valid value") {
+    val v = "SPARK_GRAFT_STREAM_PROBE_LIMIT"
+    assert(StreamGuard.limitFromEnv(v, 2.0, Map.empty) == 2.0)
+    assert(StreamGuard.limitFromEnv(v, 2.0, Map(v -> "3.5")) == 3.5)
+  }
+
+  // NaN compares false against every probe and "abc" used to throw a
+  // NumberFormatException naming no variable: either way a guard could
+  // switch itself off, so a bad limit must fail and say which one
+  Seq("abc", "NaN", "0").foreach { bad =>
+    test(s"probe limit '$bad' fails naming the variable") {
+      val e = intercept[IllegalArgumentException] {
+        StreamGuard.limitFromEnv("SPARK_GRAFT_CALIB_LIMIT", 10.0,
+          Map("SPARK_GRAFT_CALIB_LIMIT" -> bad))
+      }
+      assert(e.getMessage.contains("SPARK_GRAFT_CALIB_LIMIT") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
+  test("a corpus-free leg runs and records through the bench path") {
+    val out = java.nio.file.Files.createTempDirectory("stream-bench-spec")
+    val leg = StreamBench.select("micro_1k").head
+    StreamBench.runLeg(spark, leg, seconds = 8, out.toString)
+    val j = Json.readFile(out.resolve("micro_1k.json").toString)
+    assert(j.get("result").get("batches").asInt > 0, j)
+    assert(j.get("guard").get("name").asText == "micro_1k", j)
+    assert(j.get("config").get("state_bytes").asInt == 1024, j)
   }
 }

@@ -10,7 +10,11 @@
 # a CLI calibration probe between every pair bounds the window's
 # health. The current build's legs also carry their own StreamGuard
 # stamps; the r14 build predates the guard, so its legs are bracketed
-# only by the script's probes.
+# only by the script's probes. The r14 build runs its own CLI
+# (StreamBench <rate> <keys> <bytes> <seconds> <outFile>, one "value"
+# field); the current build runs one leg of the leg table
+# (StreamBench <dir> <seconds> micro_<k>k) and records rows/s under
+# result.rows_per_sec in <dir>/micro_<k>k.json.
 #
 # Usage: tools/stream_ab.sh <outDir> [secondsPerLeg] [r14ClassesDir]
 set -euo pipefail
@@ -40,12 +44,20 @@ probe() {
 
 leg() {  # leg <build> <classes> <bytes>
   local build="$1" cp="$2" bytes="$3"
-  local name="${build}_$((bytes / 1024))k"
+  local k="$((bytes / 1024))k"
+  local name="${build}_$k"
+  local args=(60000 10000 "$bytes" "$SECONDS_PER_LEG" "$OUT/$name.json")
+  if [ "$build" = cur ]; then
+    args=("$OUT/$name" "$SECONDS_PER_LEG" "micro_$k")
+  fi
   echo "[ab] leg $name starting" >&2
-  $JVM -cp "$cp:/opt/spark/jars/*" graft.StreamBench \
-    60000 10000 "$bytes" "$SECONDS_PER_LEG" "$OUT/$name.json" \
+  $JVM -cp "$cp:/opt/spark/jars/*" graft.StreamBench "${args[@]}" \
     > "$OUT/$name.stdout" 2> "$OUT/$name.stderr" || {
       echo "[ab] leg $name FAILED" >&2; cat "$OUT/$name.stderr" >&2; exit 1; }
+  # normalize the current build's record to the r14 shape the summary reads
+  if [ "$build" = cur ]; then
+    python3 -c "import json;r=json.load(open('$OUT/$name/micro_$k.json'))['result'];json.dump({'value':r['rows_per_sec'],'busy_fraction':r['busy_fraction']},open('$OUT/$name.json','w'))"
+  fi
   python3 -c "import json;d=json.load(open('$OUT/$name.json'));print('$name', d['value'], 'busy', d['busy_fraction'])"
 }
 
