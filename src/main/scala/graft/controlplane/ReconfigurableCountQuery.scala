@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StreamingQuery}
 
+import graft.functions.GraftFunctions
 import graft.model.KeyedTuple
+import graft.streaming.Metrics
 import graft.streaming.Metrics.ReconfigProfiler
 
 /** State of the reconfigurable running-count operator. `payload` is
@@ -273,18 +275,29 @@ final class ReconfigurableCountQuery(
     * next generation, observable through [[PlacementObserver]]). */
   def start(): Unit = ReconfigurableCountQuery.startLock.synchronized {
     val desc = plan.operators(OperatorName)
-    val logicName = desc.udfName
     // pinned state layout (Flink keygroup model) or legacy follow-the-
-    // parallelism; the routed map stage below always uses parallelism.
+    // parallelism; the routed map stage always uses parallelism.
     // shuffle.partitions is SESSION-scoped and read when the stream
-    // materializes at writeStream.start() below — two pipelines
-    // sharing one session (the sink-buffer design supports that) could
-    // otherwise interleave set→start windows and bucket one pipeline's
-    // state under the other's partition count, so the whole
-    // conf-set→start sequence is serialized JVM-wide
-    spark.conf.set("spark.sql.shuffle.partitions",
-      statePartitions.getOrElse(desc.parallelism))
-    val observed = graft.streaming.Metrics
+    // materializes at writeStream.start() — two pipelines sharing one
+    // session (the sink-buffer design supports that) could otherwise
+    // interleave set→start windows and bucket one pipeline's state
+    // under the other's partition count, so the whole conf-set→start
+    // sequence is serialized JVM-wide. StreamExecution clones the
+    // session when start() builds it, so the running query keeps the
+    // value and the caller's key is restored right after — unset again
+    // when it was unset: getAll holds only the explicitly set keys,
+    // where get() reports a default as if it had been set.
+    val partitionsKey = "spark.sql.shuffle.partitions"
+    val callerPartitions = spark.conf.getAll.get(partitionsKey)
+    spark.conf.set(partitionsKey, statePartitions.getOrElse(desc.parallelism))
+    try query = startQuery(desc)
+    finally callerPartitions.fold(spark.conf.unset(partitionsKey))(
+      spark.conf.set(partitionsKey, _))
+  }
+
+  private def startQuery(desc: OperatorDescriptor): StreamingQuery = {
+    val logicName = desc.udfName
+    val observed = Metrics
       .observeKeygroups(sourceFactory().toDF(), "key", maxParallelism)
       .as[KeyedTuple]
     // keygroup → routing token whose hash lands on the assigned partition
@@ -294,7 +307,7 @@ final class ReconfigurableCountQuery(
     }.toMap
     val routed = observed.repartition(desc.parallelism,
       element_at(typedLit(kgToken),
-        pmod(hash(col("key")), lit(maxParallelism)).cast("int")))
+        GraftFunctions.keygroup(col("key"), maxParallelism)))
     val (tag, gen, mp) = (sinkKey, generation, maxParallelism)
     val placed =
       if (!observePlacement) routed
@@ -331,7 +344,7 @@ final class ReconfigurableCountQuery(
     val writer = stream.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir(generation))
-    query = fileSinkDir match {
+    fileSinkDir match {
       case Some(dir) =>
         // production path: distributed executor-side append, nothing
         // through the driver. Rows are stamped with (generation,

@@ -4,9 +4,13 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
+
+import graft.functions.GraftFunctions
 
 /** Observability surface (SURVEY §2.10).
   *
@@ -64,19 +68,40 @@ object Metrics {
 
   /** Per-keygroup load instrumentation, the analog of the reference's
     * per-key-group rate metrics (KafkaMetricsManager.java:242-250):
-    * `observe()` attaches conditional counts per keygroup to the
-    * streaming plan, and the listener reads them back per batch from
-    * `observedMetrics` — Spark's native task→driver metrics channel. */
+    * `observe()` attaches one aggregate to the streaming plan that
+    * counts rows per keygroup into an `array<bigint>` of `groups`
+    * entries, and the listener reads it back per batch from
+    * `observedMetrics` — Spark's native task→driver metrics channel.
+    * The keygroup is computed once per row and counted by one
+    * aggregate; a conditional count per keygroup would hash every key
+    * `groups` times, and Janino would compile its ~117k-character
+    * projection on every restart. */
   val KeygroupMetricName = "keygroups"
 
-  def observeKeygroups(df: DataFrame, keyCol: String,
-      groups: Int = 32): DataFrame = {
-    val counts = (0 until groups).map { kg =>
-      count(when(pmod(hash(col(keyCol)), lit(groups)) === kg, 1))
-        .as(s"kg$kg")
+  /** Rows per keygroup in a primitive array indexed by keygroup; the
+    * input is a keygroup in `[0, groups)`. */
+  private final class KeygroupCounts(groups: Int)
+      extends Aggregator[Int, Array[Long], Array[Long]] {
+    def zero: Array[Long] = new Array[Long](groups)
+    def reduce(buf: Array[Long], kg: Int): Array[Long] = {
+      buf(kg) += 1
+      buf
     }
-    df.observe(KeygroupMetricName, counts.head, counts.tail: _*)
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      var i = 0
+      while (i < groups) { a(i) += b(i); i += 1 }
+      a
+    }
+    def finish(buf: Array[Long]): Array[Long] = buf
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   }
+
+  def observeKeygroups(df: DataFrame, keyCol: String,
+      groups: Int): DataFrame =
+    df.observe(KeygroupMetricName,
+      udaf(new KeygroupCounts(groups), Encoders.scalaInt)(
+        GraftFunctions.keygroup(col(keyCol), groups)).as("rows"))
 
   /** Source-timestamp observation for end-to-end latency: the marker
     * the reference's DummyLatencyCountingSink derives latency from is
@@ -124,14 +149,9 @@ object Metrics {
     override def onQueryProgress(
         e: StreamingQueryListener.QueryProgressEvent): Unit = {
       val p = e.progress
-      val kg = Option(p.observedMetrics.get(KeygroupMetricName)) match {
-        case Some(row) =>
-          row.schema.fieldNames.zipWithIndex.collect {
-            case (name, i) if name.startsWith("kg") && !row.isNullAt(i) =>
-              name.drop(2).toInt -> row.getLong(i)
-          }.toMap
-        case None => Map.empty[Int, Long]
-      }
+      val kg = Option(p.observedMetrics.get(KeygroupMetricName))
+        .map(_.getSeq[Long](0).zipWithIndex.map(_.swap).toMap)
+        .getOrElse(Map.empty[Int, Long])
       val latency = Option(p.observedMetrics.get(SourceTsMetricName))
         .filter(r => !r.isNullAt(0))
         .map { r =>
