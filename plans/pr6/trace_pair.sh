@@ -1,15 +1,16 @@
 #!/bin/bash
-# One traced pair of reconfig_under_load, parent first, with Spark event
-# logs and the CSV metrics sink switched on through JVM system
-# properties (the benchmark's files stay as they are), then the
-# per-batch stage figures of each side.
+# The record of how plans/pr6/trace_pair/ was made: one traced pair of
+# reconfig_under_load, parent first, with Spark event logs and the CSV
+# metrics sink switched on through JVM system properties (the
+# benchmark's files stay as they are), then the per-batch stage figures
+# of each side. Kept as evidence for that one measurement, not as a
+# general tool; parent/change series go through tools/perfbench_ab.py.
 #
 #   plans/pr6/trace_pair.sh <parent-tree> <out-dir> [seed=13]
 #
-# <parent-tree> is an exported parent checkout, such as the one
-# tools/perfbench_ab.py keeps in the system temp directory. Run from the
-# repository root; writes <out-dir>/<side>.json (run.py's result line)
-# and <out-dir>/<side>_stages.json.
+# <parent-tree> is the parent commit exported with `git archive`. Run
+# from the repository root; writes <out-dir>/<side>.json (run.py's
+# result line) and <out-dir>/<side>_stages.json.
 set -euo pipefail
 parent=$(cd "$1" && pwd)
 out=$(mkdir -p "$2" && cd "$2" && pwd)

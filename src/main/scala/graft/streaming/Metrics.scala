@@ -73,9 +73,7 @@ object Metrics {
     * entries, and the listener reads it back per batch from
     * `observedMetrics` — Spark's native task→driver metrics channel.
     * The keygroup is computed once per row and counted by one
-    * aggregate; a conditional count per keygroup would hash every key
-    * `groups` times, and Janino would compile its ~117k-character
-    * projection on every restart. */
+    * aggregate. */
   val KeygroupMetricName = "keygroups"
 
   /** Rows per keygroup in a primitive array indexed by keygroup; the

@@ -2,19 +2,18 @@
 """Alternating parent/change pairs of the repo's benchmark, and their verdict.
 
     python3 tools/perfbench_ab.py <parent-rev> <workload> <seed>... \\
-        [--seconds S] [--trace 0|1] [--jsonl runs.jsonl] [--summary out.json]
-    python3 tools/perfbench_ab.py --report <runs.jsonl> <workload> [--trace 0|1]
+        [--jsonl runs.jsonl] [--summary out.json]
+    python3 tools/perfbench_ab.py --report <runs.jsonl> <workload>
 
 Run from the repository root. The parent side is `git archive
 <parent-rev>` exported once into the system temp directory (kept per
 commit, so its benchmark build is reused); the change side is this
 checkout as it stands. For each seed, `perfbench/run.py` runs once in
-each tree, one pair per seed, the side that goes first alternating from
-pair to pair. Every run's result line goes to the JSONL file with its
+each tree, untraced and for BENCHMARK.json's `run_seconds`, one pair per
+seed, the side that goes first alternating from pair to pair. Every run's result line goes to the JSONL file with its
 seed, side, order and host stamps, so pairs from several calls add up.
 
-The report covers every pair of the workload (and trace setting) in the
-file. Per metric it prints each side's q1/median/q3
+The report covers every pair of the workload in the file. Per metric it prints each side's q1/median/q3
 (`statistics.quantiles(n=4)`), the change's wins (ties count for
 neither side), the parent's IQR, and two verdicts:
 - `gain`: the change won at least 9/10 of the pairs and its median beats
@@ -61,13 +60,13 @@ def export(rev: str) -> str:
     return out
 
 
-def run_once(tree: str, workload: str, seed: int, seconds: float, trace: int) -> dict:
+def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict:
     """One `perfbench/run.py` call in `tree`: its result line and the run
     record's host stamps, or the error it died with."""
     t0 = time.time()
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
                         "--seed", str(seed), "--seconds", str(seconds),
-                        "--trace", str(trace)],
+                        "--trace", "0"],
                        cwd=tree, text=True, stdout=subprocess.PIPE, stderr=subprocess.PIPE)
     out = {"wall_s": round(time.time() - t0, 1)}
     lines = p.stdout.strip().splitlines()
@@ -75,7 +74,7 @@ def run_once(tree: str, workload: str, seed: int, seconds: float, trace: int) ->
         return {**out, "error": (p.stderr or p.stdout)[-2000:]}
     out["result"] = json.loads(lines[-1])
     rec = os.path.join(tree, ".bench_build", "perfbench", "runs",
-                       f"{workload}-seed{seed}-trace{trace}.json")
+                       f"{workload}-seed{seed}-trace0.json")
     if os.path.exists(rec):
         out["host"] = json.load(open(rec)).get("host")
     return out
@@ -88,14 +87,14 @@ def quartiles(xs: list) -> tuple:
     return q1, q2, q3
 
 
-def report(rows: list, workload: str, trace: int) -> dict:
+def report(rows: list, workload: str) -> dict:
     """Pair the runs of `workload` by pair id and judge every metric."""
     spec = json.load(open(os.path.join(ROOT, "BENCHMARK.json")))
     bounds = {m["name"]: m["bound"] for m in spec["end_to_end"]}
     better = {m["name"]: m["better"] for m in spec["end_to_end"] + spec["per_layer"]}
     pairs = {}
     for r in rows:
-        if r["workload"] == workload and r["trace"] == trace:
+        if r["workload"] == workload:
             pairs.setdefault(r["pair"], {})[r["side"]] = r
     whole = [p for p in pairs.values() if "parent" in p and "change" in p]
     sides = ("parent", "change")
@@ -130,7 +129,7 @@ def report(rows: list, workload: str, trace: int) -> dict:
             m["bound"] = ("ok" if worse <= bounds[n] else "WORSE") \
                 if spread <= bounds[n] or all_better else "unresolved"
         metrics[n] = m
-    return {"workload": workload, "trace": trace, "pairs": len(ok),
+    return {"workload": workload, "pairs": len(ok),
             "seeds": [p["parent"]["seed"] for p in ok], "health": health,
             "metrics": metrics}
 
@@ -140,7 +139,7 @@ def fmt(x) -> str:
 
 
 def print_report(rep: dict) -> None:
-    print(f"{rep['workload']} trace={rep['trace']}: {rep['pairs']} pairs, "
+    print(f"{rep['workload']}: {rep['pairs']} pairs, "
           f"seeds {rep['seeds']}")
     for s, h in rep["health"].items():
         print(f"  {s}: {h['runs']} runs, {h['errors']} errors, "
@@ -163,8 +162,6 @@ def main() -> None:
     ap.add_argument("rev", nargs="?")
     ap.add_argument("workload", nargs="?")
     ap.add_argument("seeds", nargs="*", type=int)
-    ap.add_argument("--seconds", type=float)
-    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--jsonl", help="run log (default .bench_build/perfbench_ab/<workload>.jsonl)")
     ap.add_argument("--summary", help="also write the report as JSON here")
     ap.add_argument("--report", nargs=2, metavar=("JSONL", "WORKLOAD"),
@@ -172,11 +169,11 @@ def main() -> None:
     a = ap.parse_args()
     if a.report:
         rows = [json.loads(l) for l in open(a.report[0]) if l.strip()]
-        rep = report(rows, a.report[1], a.trace)
+        rep = report(rows, a.report[1])
     else:
         if not (a.rev and a.workload and a.seeds):
             ap.error("need <parent-rev> <workload> <seed>...")
-        seconds = a.seconds or json.load(open(os.path.join(ROOT, "BENCHMARK.json")))["run_seconds"]
+        seconds = json.load(open(os.path.join(ROOT, "BENCHMARK.json")))["run_seconds"]
         jsonl = a.jsonl or os.path.join(ROOT, ".bench_build", "perfbench_ab", f"{a.workload}.jsonl")
         os.makedirs(os.path.dirname(os.path.abspath(jsonl)), exist_ok=True)
         rows = [json.loads(l) for l in open(jsonl) if l.strip()] if os.path.exists(jsonl) else []
@@ -187,9 +184,9 @@ def main() -> None:
             pair = first + i
             order = ("parent", "change") if pair % 2 == 0 else ("change", "parent")
             for k, side in enumerate(order):
-                out = run_once(trees[side], a.workload, seed, seconds, a.trace)
+                out = run_once(trees[side], a.workload, seed, seconds)
                 row = {"pair": pair, "seed": seed, "side": side, "order": k,
-                       "workload": a.workload, "trace": a.trace, "seconds": seconds,
+                       "workload": a.workload, "seconds": seconds,
                        "parent_rev": parent_sha, "time": time.time(), **out}
                 rows.append(row)
                 with open(jsonl, "a") as f:
@@ -198,7 +195,7 @@ def main() -> None:
                 print(f"pair {pair} seed {seed} {side}: "
                       + (f"correct={res.get('correct')} failed={res.get('failed')}"
                          if res else "ERROR " + out["error"][-300:]), flush=True)
-        rep = report(rows, a.workload, a.trace)
+        rep = report(rows, a.workload)
     print_report(rep)
     if a.summary:
         open(a.summary, "w").write(json.dumps(rep, indent=1) + "\n")
