@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -119,16 +121,27 @@ object ReconfigBench {
     }.getOrElse(0L) // no committed batch => no files to read
     val mode = if (pinned) "pinned" else "legacy"
     val phaseNames = reports.flatMap(_._1.keys).distinct.sorted
-    val phaseJson = phaseNames.map { ph =>
+    val phases = ListMap.from(phaseNames.map { ph =>
       val xs = reports.map(_._1.getOrElse(ph, 0.0))
-      f""""$ph":{"mean_ms":${xs.sum / xs.size}%.0f,"max_ms":${xs.max}%.0f}"""
-    }.mkString("{", ",", "}")
+      ph -> ListMap("mean_ms" -> math.round(xs.sum / xs.size),
+        "max_ms" -> math.round(xs.max))
+    })
     val wallXs = reports.map(_._2)
-    val wallJson =
-      if (wallXs.isEmpty) """{"mean":null,"max":null}"""
-      else f"""{"mean":${wallXs.sum / wallXs.size}%.0f,"max":${wallXs.max}%.0f}"""
-    f"""{"mode":"$mode","state_bytes_per_key":$stateBytes,"reconfigs":${reports.size},"phases":$phaseJson,"reconfig_wall_ms":$wallJson,"sustained_rows_per_sec":${totalRows / wallSec}%.0f,"steady_rows_per_sec":$steadyRps%.0f,"steady_batches":$steadyN,"offered_rows_per_sec":$rate,"run_sec":$wallSec%.1f}"""
+    val wall =
+      if (wallXs.isEmpty) ListMap("mean" -> null, "max" -> null)
+      else ListMap("mean" -> math.round(wallXs.sum / wallXs.size),
+        "max" -> math.round(wallXs.max))
+    Json.mapper.writeValueAsString(ListMap(
+      "mode" -> mode, "state_bytes_per_key" -> stateBytes,
+      "reconfigs" -> reports.size, "phases" -> phases,
+      "reconfig_wall_ms" -> wall,
+      "sustained_rows_per_sec" -> math.round(totalRows / wallSec),
+      "steady_rows_per_sec" -> math.round(steadyRps),
+      "steady_batches" -> steadyN, "offered_rows_per_sec" -> rate,
+      "run_sec" -> tenths(wallSec)))
   }
+
+  private def tenths(x: Double): Double = math.round(x * 10) / 10.0
 
   /** The CLOSED StreamSwitch loop under live load: per-batch observed
     * keygroup rates feed the λ/μ policy, whose decisions drive REAL
@@ -230,12 +243,21 @@ object ReconfigBench {
       streamSwitchPhase(spark, rate / 4, nKeys, initialP = loadP,
         seconds = seconds, tickSec = tickSec, stableTicks = 3,
         seedMu = loadMu)
-    def arr(xs: List[String]) =
-      xs.map("\"" + _.replace("\"", "'") + "\"").mkString("[", ",", "]")
-    def nums(xs: List[Double]) =
-      xs.map(u => f"$u%.2f").mkString("[", ",", "]")
+    def hundredths(xs: List[Double]) = xs.map(u => math.round(u * 100) / 100.0)
     val scaleIns = drainDecisions.count(_.contains("scale-in"))
-    f"""{"mode":"streamswitch","offered_rows_per_sec":$rate,"service_rate_per_task":5000,"load":{"initial_parallelism":8,"final_parallelism":$loadP,"converged":$loadConverged,"max_util_ticks":${nums(loadUtils)},"decisions":${arr(loadDecisions)}},"drain":{"offered_rows_per_sec":${rate / 4},"initial_parallelism":$loadP,"final_parallelism":$drainP,"converged":$drainConverged,"scale_ins":$scaleIns,"max_util_ticks":${nums(drainUtils)},"decisions":${arr(drainDecisions)}},"run_sec":${(System.nanoTime() - t0) / 1e9}%.1f}"""
+    Json.mapper.writeValueAsString(ListMap(
+      "mode" -> "streamswitch", "offered_rows_per_sec" -> rate,
+      "service_rate_per_task" -> 5000,
+      "load" -> ListMap("initial_parallelism" -> 8,
+        "final_parallelism" -> loadP, "converged" -> loadConverged,
+        "max_util_ticks" -> hundredths(loadUtils),
+        "decisions" -> loadDecisions),
+      "drain" -> ListMap("offered_rows_per_sec" -> rate / 4,
+        "initial_parallelism" -> loadP, "final_parallelism" -> drainP,
+        "converged" -> drainConverged, "scale_ins" -> scaleIns,
+        "max_util_ticks" -> hundredths(drainUtils),
+        "decisions" -> drainDecisions),
+      "run_sec" -> tenths((System.nanoTime() - t0) / 1e9)))
   }
 
   def main(args: Array[String]): Unit = {

@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 
+import graft.Json
+
 /** Driver-side REST endpoint for controller lifecycle — the analog of
   * the reference's controller-registration handler (reference
   * rest/handler/job/RegisterStreamManagerControllerHandler.java:52-110,
@@ -39,8 +41,9 @@ final class ControllerEndpoint(
 
   def active: Option[Controller] = activeController
 
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
+  /** Answer with `body` as one JSON object. */
+  private def respond(ex: HttpExchange, code: Int, body: Map[String, Any]): Unit = {
+    val bytes = Json.mapper.writeValueAsBytes(body)
     ex.sendResponseHeaders(code, bytes.length)
     val os = ex.getResponseBody
     os.write(bytes); os.close()
@@ -53,47 +56,38 @@ final class ControllerEndpoint(
     if (i < 0) (body.trim, "") else (body.take(i).trim, body.drop(i + 1))
   }
 
+  private def error(ex: HttpExchange, code: Int, msg: String): Unit =
+    respond(ex, code, Map("error" -> msg))
+
   private def handleSource(ex: HttpExchange)(
-      compile: (String, String) => String): Unit = {
+      compile: (String, String) => Map[String, Any]): Unit = {
     if (ex.getRequestMethod != "POST") {
-      respond(ex, 405, """{"error":"method not allowed"}"""); return
+      error(ex, 405, "method not allowed"); return
     }
     if (!DynamicCompiler.enabled) {
-      respond(ex, 403,
-        s"""{"error":"dynamic compilation disabled; set -D${DynamicCompiler.FlagKey}=true"}""")
+      error(ex, 403, "dynamic compilation disabled; " +
+        s"set -D${DynamicCompiler.FlagKey}=true")
       return
     }
     val (name, source) = nameAndSource(new String(
       ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
     if (name.isEmpty || source.trim.isEmpty) {
-      respond(ex, 400, """{"error":"body = name on first line, Scala source after"}""")
+      error(ex, 400, "body = name on first line, Scala source after")
       return
     }
     try respond(ex, 200, compile(name, source))
     catch {
       case e: DynamicCompiler.CompileException =>
-        respond(ex, 400, s"""{"error":${jsonStr(e.getMessage)}}""")
+        error(ex, 400, e.getMessage)
       // anything else from the compile/eval path (e.g. the NPE a
       // source evaluating to null raises inside eval's type match)
       // must still ANSWER the exchange — an escaped throwable drops
       // the connection with no response at all
       case scala.util.control.NonFatal(e) =>
-        respond(ex, 400, s"""{"error":${
-          jsonStr(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
-        }}""")
+        error(ex, 400,
+          s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
     }
   }
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   def start(): Int = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
@@ -102,14 +96,14 @@ final class ControllerEndpoint(
         handleSource(ex) { (name, source) =>
           val c = DynamicCompiler.compileController(source)
           activeController = Some(c)
-          s"""{"compiled":${jsonStr(name)},"controller":${jsonStr(c.name)}}"""
+          Map("compiled" -> name, "controller" -> c.name)
         }
     })
     server.createContext("/jobs/udf/source", new HttpHandler {
       override def handle(ex: HttpExchange): Unit =
         handleSource(ex) { (name, source) =>
           DynamicCompiler.compileAndRegisterCountLogic(name, source)
-          s"""{"registered":${jsonStr(name)}}"""
+          Map("registered" -> name)
         }
     })
     server.createContext("/jobs/controller", new HttpHandler {
@@ -120,26 +114,21 @@ final class ControllerEndpoint(
           controllers.get(name) match {
             case Some(factory) =>
               activeController = Some(factory())
-              respond(ex, 200, s"""{"registered":${jsonStr(name)}}""")
-            case None =>
-              respond(ex, 404,
-                s"""{"error":${jsonStr(s"unknown controller $name")}}""")
+              respond(ex, 200, Map("registered" -> name))
+            case None => error(ex, 404, s"unknown controller $name")
           }
-        case "GET" =>
-          respond(ex, 200, s"""{"active":${
-            jsonStr(activeController.map(_.name).getOrElse("none"))}}""")
-        case _ => respond(ex, 405, """{"error":"method not allowed"}""")
+        case "GET" => respond(ex, 200,
+          Map("active" -> activeController.map(_.name).getOrElse("none")))
+        case _ => error(ex, 405, "method not allowed")
       }
     })
     server.createContext("/jobs/plan", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         val plan = executor.getPlan
-        val ops = plan.operators.map { case (name, d) =>
-          s"""${jsonStr(name)}:{"parallelism":${d.parallelism},"udf":${
-            jsonStr(d.udfName)}}"""
-        }.mkString("{", ",", "}")
-        respond(ex, 200,
-          s"""{"maxParallelism":${plan.maxParallelism},"operators":$ops}""")
+        respond(ex, 200, Map("maxParallelism" -> plan.maxParallelism,
+          "operators" -> plan.operators.map { case (name, d) =>
+            name -> Map("parallelism" -> d.parallelism, "udf" -> d.udfName)
+          }))
       }
     })
     server.start()

@@ -568,9 +568,9 @@ final class StreamSwitchController(operator: String,
   * task carries more than `imbalanceFactor` × the mean keygroup load,
   * remap keygroups to tasks by greedy bin packing of observed rates.
   * Packs onto the PLAN's current parallelism (read per decision, never
-  * a constructor constant): after any rescale a stale fixed count
-  * would assign keygroups to tasks the routing layer clamps onto the
-  * last partition — the opposite of balancing. */
+  * a constructor constant): after a scale-in a stale fixed count
+  * would name tasks that no longer exist, which `assignWorkload`
+  * rejects. */
 final class LoadBalanceController(operator: String,
     maxParallelism: Int = 128, imbalanceFactor: Double = 1.5)
   extends Controller {

@@ -1,10 +1,5 @@
 package graft.controlplane
 
-import org.apache.spark.Partitioner
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
-
-import graft.functions.GraftFunctions
-
 /** Explicit keygroup → partition routing — the analog of the
   * reference's mutable `AssignedKeyGroupStreamPartitioner`
   * (flink-streaming-java/.../partitioner/AssignedKeyGroupStreamPartitioner.java:15-90:
@@ -12,57 +7,16 @@ import graft.functions.GraftFunctions
   * control plane rewrites at runtime).
   *
   * Spark's DataFrame exchanges only offer hash/range partitioning, so
-  * identity placement of a keygroup onto a chosen partition needs the
-  * RDD path with a custom [[Partitioner]] — the documented
-  * "mapPartitions as a last resort" case. Used for explicit
-  * load-balancing experiments; regular keyed operators stay on the
-  * hash-partitioned DataFrame path.
+  * [[ReconfigurableCountQuery]] realizes an arbitrary assignment
+  * through the ordinary hash exchange: it repartitions on the
+  * [[routingTokens]] entry of each record's [[keygroup]], which works
+  * on streaming Datasets. [[PlacementObserver]] records where each
+  * keygroup actually ran.
   */
 object KeygroupRouter {
 
-  /** Routes keygroup kg to partition assignment(kg). A stale
-    * assignment VALUE built for a larger parallelism (legal plan
-    * state after a scale-in — the routed DataFrame path tolerates it
-    * the same way) clamps onto the last partition instead of crashing
-    * the shuffle; a keygroup OUTSIDE the assignment's range stays a
-    * loud error (that is a maxParallelism mismatch between route()
-    * and the assignment, a wiring bug no clamp should hide).
-    *
-    * Clamping is crash-free but NOT silent: the clamp redirects ANY
-    * over-range value to the last partition, so a genuinely mis-built
-    * assignment would skew every excess keygroup onto one partition —
-    * each occurrence bumps `clampCount` (a named accumulator when
-    * wired through [[route]], visible in the UI/status APIs) and the
-    * first occurrence per task logs a warning naming the offending
-    * keygroup, so a PERSISTENT mis-sized assignment is visible
-    * instead of masquerading as a legitimate post-scale-in plan. */
-  final class AssignedKeygroupPartitioner(
-      assignment: Array[Int], override val numPartitions: Int,
-      clampCount: Option[org.apache.spark.util.LongAccumulator] = None)
-    extends Partitioner {
-    @transient private var warned = false
-    override def getPartition(key: Any): Int = key match {
-      case kg: Int =>
-        require(kg >= 0 && kg < assignment.length,
-          s"keygroup $kg outside assignment range ${assignment.length} " +
-            "(maxParallelism mismatch between route() and the assignment)")
-        val p = assignment(kg)
-        if (p >= numPartitions) {
-          clampCount.foreach(_.add(1L))
-          if (!warned) {
-            warned = true
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"keygroup $kg assigned to partition $p >= numPartitions " +
-                s"$numPartitions - clamping to ${numPartitions - 1} " +
-                "(expected only transiently after a scale-in; persistent " +
-                "clamping means a mis-built assignment)")
-          }
-          numPartitions - 1
-        } else p
-      case other => throw new IllegalArgumentException(s"not a keygroup: $other")
-    }
-  }
-
+  /** The keygroup of `key`: Murmur3 (seed 42) of its UTF-8 bytes, mod
+    * `maxParallelism`. */
   def keygroup(key: String, maxParallelism: Int): Int = {
     val bytes = key.getBytes("UTF-8")
     val h = org.apache.spark.unsafe.hash.Murmur3_x86_32
@@ -70,59 +24,6 @@ object KeygroupRouter {
         org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
         bytes.length, 42)
     ((h % maxParallelism) + maxParallelism) % maxParallelism
-  }
-
-  // ONE clamp accumulator per SparkContext, shared by every route()
-  // call: a fresh accumulator per call fragments the count across
-  // reroutes (a persistently mis-built assignment shows as many small
-  // per-stage counts instead of one growing counter — defeating the
-  // visibility the counter exists for) and leaves callers nothing to
-  // read. Keyed by the STABLE context identity (applicationId +
-  // startTime), not identityHashCode: identity hashes are never
-  // evicted (one leaked accumulator per context in a long-lived
-  // process) and can be REUSED after a stopped context is GC'd —
-  // handing route() an accumulator registered on the dead context, so
-  // clamp counts would silently vanish. Entries of stopped contexts
-  // are evicted on every lookup.
-  private val clampAccumulators = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.SparkContext,
-      org.apache.spark.util.LongAccumulator)]
-
-  /** The session-wide clamp counter ([[AssignedKeygroupPartitioner]]'s
-    * over-range redirects) — exposed so controllers/tests can read the
-    * cumulative count programmatically. */
-  def clampCounter(
-      sc: org.apache.spark.SparkContext): org.apache.spark.util.LongAccumulator = {
-    clampAccumulators.filterInPlace { case (_, (c, _)) => !c.isStopped }
-    clampAccumulators.getOrElseUpdate(
-      s"${sc.applicationId}@${sc.startTime}",
-      (sc, sc.longAccumulator("graft.keygroup.clamps")))._2
-  }
-
-  /** Re-route a keyed dataset so each keygroup lands on its assigned
-    * partition. Returns the routed dataset (same rows, controlled
-    * placement). */
-  def route[T: Encoder: scala.reflect.ClassTag](
-      ds: Dataset[T], keyOf: T => String,
-      assignment: Vector[Int], numPartitions: Int,
-      maxParallelism: Int = 128): Dataset[T] = {
-    val spark = ds.sparkSession
-    val part = new AssignedKeygroupPartitioner(assignment.toArray,
-      numPartitions,
-      Some(clampCounter(spark.sparkContext)))
-    val routed = ds.rdd
-      .keyBy(t => keygroup(keyOf(t), maxParallelism))
-      .partitionBy(part)
-      .values
-    spark.createDataset(routed)
-  }
-
-  /** Per-partition keygroup inventory (for tests / balance metrics). */
-  def partitionInventory[T](ds: Dataset[T], keyOf: T => String,
-      maxParallelism: Int = 128): Map[Int, Set[Int]] = {
-    ds.rdd.mapPartitionsWithIndex { (pid, it) =>
-      Iterator.single(pid -> it.map(t => keygroup(keyOf(t), maxParallelism)).toSet)
-    }.collect().toMap
   }
 
   /** Balanced round-robin remap `kg → kg mod p` — the reference's

@@ -1,7 +1,5 @@
 package graft.controlplane
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
@@ -20,54 +18,16 @@ import graft.streaming.Metrics.ReconfigProfiler
   * that its cost does not grow with this field. */
 case class CountState(count: Long, payload: Array[Byte] = Array.empty)
 
-/** The controller-facing API — the analog of the reference's
-  * `ReconfigurationExecutor` (reference
-  * controlplane/streammanager/abstraction/ReconfigurationExecutor.java:45-47):
-  * controllers read the plan, stage changes, and `execute()` applies
-  * them atomically.
-  */
-/** Driver-side sink buffers behind the foreachBatch sink — the
-  * update-mode row log the memory sink would have kept, accumulated
-  * here so the query can resume checkpoints (see `start()`).
-  *
-  * Buffers are keyed by pipeline INSTANCE (not bare table name), so
-  * two live pipelines that happen to share a `sinkTable` name cannot
-  * interleave rows in one queue — the later `start()`'s temp view
-  * simply wins, matching normal temp-view semantics. Like the memory
-  * sink, the row log grows with every update ever emitted and the view
-  * rebuild is O(total rows) per batch: a test/debug harness sink, not
-  * a production sink (production pipelines write to real sinks). */
 object ReconfigurableCountQuery {
   /** Serializes the session-conf-set → writeStream.start() window in
     * [[ReconfigurableCountQuery.start]] across pipelines sharing one
     * SparkSession. */
   private[controlplane] val startLock = new Object
 
-  private val sinks = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.ConcurrentLinkedQueue[KeyedTuple]]()
-
   private val instanceIds = new java.util.concurrent.atomic.AtomicLong()
 
-  private def queue(table: String) =
-    sinks.computeIfAbsent(table,
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[KeyedTuple]())
-
-  private[controlplane] def appendToSink(table: String,
-      rows: Array[KeyedTuple]): Unit = {
-    val q = queue(table)
-    rows.foreach(q.add)
-  }
-
-  private[controlplane] def sinkRows(table: String): Seq[KeyedTuple] = {
-    import scala.jdk.CollectionConverters._
-    queue(table).asScala.toSeq
-  }
-
-  private[controlplane] def removeSink(table: String): Unit =
-    sinks.remove(table)
-
-  /** THE reader contract for the production file sink (the other half
-    * of `fileSinkDir`'s at-least-once append): the sink logs
+  /** THE reader contract for the pipeline's sink (the other half of
+    * its at-least-once append at `sinkDir`): the sink logs
     * update-mode rows (key, value, batch_id, generation). Two kinds of
     * duplication are legal in the log —
     *  - a replayed micro-batch (failure between the parquet append and
@@ -89,6 +49,12 @@ object ReconfigurableCountQuery {
   }
 }
 
+/** The controller-facing API — the analog of the reference's
+  * `ReconfigurationExecutor` (reference
+  * controlplane/streammanager/abstraction/ReconfigurationExecutor.java:45-47):
+  * controllers read the plan, stage changes, and `execute()` applies
+  * them atomically.
+  */
 trait ReconfigurationExecutor {
   def getPlan: QueryPlanDescriptor
   def assignExecutionLogic(operator: String, udfName: String): Unit
@@ -123,8 +89,9 @@ trait ReconfigurationExecutor {
   * (e.g. a fresh Kafka reader with group offsets, or the next
   * MemoryStream in tests) — offsets of the old generation are not
   * carried into the new checkpoint.
-  */
-/** @param reuseCheckpointOnRemap when true, a ROUTING-ONLY
+  *
+  * @param name prefix of this instance's [[placementKey]].
+  * @param reuseCheckpointOnRemap when true, a ROUTING-ONLY
   *        reconfiguration (same parallelism, same logic — only the
   *        keygroup assignment changed) restarts the query on the SAME
   *        checkpoint instead of reading and re-feeding state: the
@@ -156,23 +123,19 @@ trait ReconfigurationExecutor {
   *        legacy O(total state) read-and-refeed. Unset = legacy mode:
   *        state partitions follow parallelism and a rescale must
   *        re-feed state.
-  * @param fileSinkDir PRODUCTION sink: when set, each micro-batch's
-  *        updates append to parquet under this directory (stamped with
-  *        the (generation, batch_id) pair) as a fully DISTRIBUTED
-  *        executor-side write — no driver collect, no O(total rows)
-  *        view rebuild — under the same checkpoint-resume contract as
-  *        the default sink. Read it back with
+  * @param fileSinkDir directory of the sink (default
+  *        `<checkpointRoot>/sink`, see [[sinkDir]]): each micro-batch's
+  *        updates append to parquet there, stamped with the
+  *        (generation, batch_id) pair, as a distributed executor-side
+  *        write. Read it back with
   *        [[ReconfigurableCountQuery.readFileSink]], which owns the
   *        last-writer-wins contract (replayed batches rewrite
-  *        identical rows; generation bumps restart batch ids).
-  *        Unset = the driver-side row-log + temp-view
-  *        sink (a test/debug harness: it exists to mimic
-  *        `format("memory")` while surviving checkpoint recovery). */
+  *        identical rows; generation bumps restart batch ids). */
 final class ReconfigurableCountQuery(
     spark: SparkSession,
     sourceFactory: () => Dataset[KeyedTuple],
     checkpointRoot: String,
-    sinkTable: String,
+    name: String,
     maxParallelism: Int = 128,
     initialParallelism: Int = 4,
     reuseCheckpointOnRemap: Boolean = false,
@@ -237,16 +200,16 @@ final class ReconfigurableCountQuery(
 
   private def checkpointDir(gen: Int) = s"$checkpointRoot/gen$gen"
 
-  // per-instance buffer key: a fresh pipeline always starts with an
-  // empty row log even when another live instance shares `sinkTable`
-  private val sinkKey =
-    s"$sinkTable#${ReconfigurableCountQuery.instanceIds.incrementAndGet()}"
+  /** Where the sink's parquet lands. Inside the checkpoint root by
+    * default: the generation scan above only matches `gen<N>`. */
+  val sinkDir: String = fileSinkDir.getOrElse(s"$checkpointRoot/sink")
 
   /** Key under which THIS instance's placement observations are
-    * recorded — per-instance for the same reason sinkKey is: two live
-    * pipelines sharing a sinkTable must not interleave last-writer-
-    * wins placement records. Tests read placements through this. */
-  def placementKey: String = sinkKey
+    * recorded — per-instance, so two live pipelines sharing a `name`
+    * cannot interleave last-writer-wins placement records. Tests read
+    * placements through this. */
+  val placementKey: String =
+    s"$name#${ReconfigurableCountQuery.instanceIds.incrementAndGet()}"
 
   override def getPlan: QueryPlanDescriptor = plan
 
@@ -260,9 +223,22 @@ final class ReconfigurableCountQuery(
       OperatorDescriptor.contiguous(op, parallelism,
         staged.operators(op).udfName, maxParallelism))
 
-  override def assignWorkload(op: String, assignment: Vector[Int]): Unit =
+  /** Stage a keygroup → task map. It must name a task in
+    * `[0, staged parallelism)` for each of the `maxParallelism`
+    * keygroups: the routing in [[start]] has no token for anything
+    * else, and by then the running query is already stopped. A bad
+    * vector throws here and leaves the staged plan as it was. */
+  override def assignWorkload(op: String, assignment: Vector[Int]): Unit = {
+    val p = staged.operators(op).parallelism
+    require(assignment.length == maxParallelism,
+      s"$op: assignment has ${assignment.length} entries, " +
+        s"expected one per keygroup ($maxParallelism)")
+    val bad = assignment.indexWhere(t => t < 0 || t >= p)
+    require(bad < 0, s"$op: keygroup $bad assigned to task " +
+      s"${assignment(bad)}, outside [0, $p)")
     staged = staged.withOperator(
       staged.operators(op).copy(keygroupAssignment = assignment))
+  }
 
   /** Build and start the current generation's query. The source is
     * instrumented with per-keygroup observed metrics so controllers
@@ -279,14 +255,14 @@ final class ReconfigurableCountQuery(
     // parallelism; the routed map stage always uses parallelism.
     // shuffle.partitions is SESSION-scoped and read when the stream
     // materializes at writeStream.start() — two pipelines sharing one
-    // session (the sink-buffer design supports that) could otherwise
-    // interleave set→start windows and bucket one pipeline's state
-    // under the other's partition count, so the whole conf-set→start
-    // sequence is serialized JVM-wide. StreamExecution clones the
-    // session when start() builds it, so the running query keeps the
-    // value and the caller's key is restored right after — unset again
-    // when it was unset: getAll holds only the explicitly set keys,
-    // where get() reports a default as if it had been set.
+    // session could otherwise interleave set→start windows and bucket
+    // one pipeline's state under the other's partition count, so the
+    // whole conf-set→start sequence is serialized JVM-wide.
+    // StreamExecution clones the session when start() builds it, so
+    // the running query keeps the value and the caller's key is
+    // restored right after — unset again when it was unset: getAll
+    // holds only the explicitly set keys, where get() reports a
+    // default as if it had been set.
     val partitionsKey = "spark.sql.shuffle.partitions"
     val callerPartitions = spark.conf.getAll.get(partitionsKey)
     spark.conf.set(partitionsKey, statePartitions.getOrElse(desc.parallelism))
@@ -303,12 +279,12 @@ final class ReconfigurableCountQuery(
     // keygroup → routing token whose hash lands on the assigned partition
     val tokens = KeygroupRouter.routingTokens(desc.parallelism)
     val kgToken: Map[Int, Int] = desc.keygroupAssignment.zipWithIndex.map {
-      case (task, kg) => kg -> tokens(math.min(task, desc.parallelism - 1))
+      case (task, kg) => kg -> tokens(task)
     }.toMap
     val routed = observed.repartition(desc.parallelism,
       element_at(typedLit(kgToken),
         GraftFunctions.keygroup(col("key"), maxParallelism)))
-    val (tag, gen, mp) = (sinkKey, generation, maxParallelism)
+    val (tag, gen, mp) = (placementKey, generation, maxParallelism)
     val placed =
       if (!observePlacement) routed
       else routed.map { t =>
@@ -337,49 +313,26 @@ final class ReconfigurableCountQuery(
         grouped.flatMapGroupsWithState(
           OutputMode.Update, GroupStateTimeout.NoTimeout)(fn)
     }
-    // foreachBatch-backed sinks (not format("memory") / format
-    // ("parquet")): both support checkpoint recovery, which the
-    // routing-only fast path needs (the memory sink refuses to resume
-    // a checkpoint, and the native file sink refuses update mode)
-    val writer = stream.writeStream
+    // a foreachBatch sink, not format("parquet"): the native file sink
+    // refuses update mode. Rows are stamped with (generation,
+    // batch_id) — batch ids restart at 0 when a non-routing reconfig
+    // opens a new generation, so readers order by the PAIR (see
+    // readFileSink)
+    val (dir, g) = (sinkDir, generation)
+    stream.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir(generation))
-    fileSinkDir match {
-      case Some(dir) =>
-        // production path: distributed executor-side append, nothing
-        // through the driver. Rows are stamped with (generation,
-        // batch_id) — batch ids restart at 0 when a non-routing
-        // reconfig opens a new generation, so readers order by the
-        // PAIR (see readFileSink)
-        val g = generation
-        writer.foreachBatch { (ds: Dataset[KeyedTuple], batchId: Long) =>
-          ds.withColumn("batch_id", lit(batchId))
-            .withColumn("generation", lit(g))
-            .write.mode("append").parquet(dir)
-          ()
-        }.start()
-      case None =>
-        val (table, key) = (sinkTable, sinkKey)
-        val outer = spark // foreachBatch hands a cloned session; register
-        // the view on the pipeline's own session so tests/readers see it
-        writer.foreachBatch { (ds: Dataset[KeyedTuple], _: Long) =>
-          ReconfigurableCountQuery.appendToSink(key, ds.collect())
-          outer.createDataFrame(ReconfigurableCountQuery.sinkRows(key))
-            .createOrReplaceTempView(table)
-          ()
-        }.start()
-    }
+      .foreachBatch { (ds: Dataset[KeyedTuple], batchId: Long) =>
+        ds.withColumn("batch_id", lit(batchId))
+          .withColumn("generation", lit(g))
+          .write.mode("append").parquet(dir)
+        ()
+      }.start()
   }
 
   def processAllAvailable(): Unit = query.processAllAvailable()
 
-  /** Stop the query and drop this instance's sink buffer — without the
-    * removal, the row logs of dead pipeline instances accumulate for
-    * the life of the JVM. */
-  def stop(): Unit = {
-    if (query != null) query.stop()
-    ReconfigurableCountQuery.removeSink(sinkKey)
-  }
+  def stop(): Unit = if (query != null) query.stop()
 
   /** Read the running count state out of a checkpoint with the batch
     * `statestore` reader (key-group state migration, Spark-native). */

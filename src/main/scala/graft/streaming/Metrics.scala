@@ -1,9 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
@@ -22,8 +18,9 @@ import graft.functions.GraftFunctions
   *
   * Spark-side: `StreamingQueryListener` progress events already carry
   * processedRowsPerSecond and batch durations (the per-epoch rate
-  * analog); latency ≈ per-batch `now − max(event ts seen)` captured in
-  * `foreachBatch` (no marker mechanism exists in Structured Streaming).
+  * analog); latency ≈ per-batch `batch end − max(event ts seen)`, with
+  * the max observed at the source by [[Metrics.observeSourceTs]] (no
+  * marker mechanism exists in Structured Streaming).
   */
 object Metrics {
 
@@ -171,26 +168,6 @@ object Metrics {
         System.currentTimeMillis())
       buf.synchronized { buf += bp }
     }
-  }
-
-  case class LatencySample(batchId: Long, rows: Long, latencyMs: Long)
-
-  /** Latency-counting sink: a `foreachBatch` function recording
-    * `now − max(tsCol)` per micro-batch — the
-    * DummyLatencyCountingSink analog. Samples are accumulated
-    * driver-side (same as the reference's sink-side logging). */
-  final class LatencySink(tsCol: String) extends Serializable {
-    val samples = new ConcurrentLinkedQueue[LatencySample]()
-    def apply(df: DataFrame, batchId: Long): Unit = {
-      val agg = df.agg(count(lit(1)), max(col(tsCol))).collect()(0)
-      val rows = agg.getLong(0)
-      if (rows > 0 && !agg.isNullAt(1)) {
-        val maxTs = agg.getTimestamp(1).getTime
-        samples.add(LatencySample(batchId, rows,
-          System.currentTimeMillis() - maxTs))
-      }
-    }
-    def all: List[LatencySample] = samples.asScala.toList
   }
 
   /** Reconfiguration-phase timer log — ReconfigurationProfiler analog

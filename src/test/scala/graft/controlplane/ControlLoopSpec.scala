@@ -25,7 +25,7 @@ class ControlLoopSpec extends AnyFunSuite {
       checkpointRoot, "ctl_sink", initialParallelism = 2,
       observePlacement = true)
     // placements are recorded under the per-INSTANCE key (two live
-    // pipelines sharing a sinkTable must not interleave records)
+    // pipelines sharing a name must not interleave records)
     PlacementObserver.clear(rq.placementKey)
 
     val collector = new Metrics.ProgressCollector
@@ -54,8 +54,8 @@ class ControlLoopSpec extends AnyFunSuite {
       // stream is observed on its new physical placement
       stream.addData((0 until 20).map(k => KeyedTuple(s"A$k", 1L)): _*)
       rq.processAllAvailable()
-      val last = spark.table("ctl_sink").as[KeyedTuple].collect()
-        .groupBy(_.key).map { case (k, v) => k -> v.map(_.value).max }
+      val last = ReconfigurableCountQuery.readFileSink(spark, rq.sinkDir)
+        .collect().map(t => t.key -> t.value).toMap
       rq.stop()
       assert(last("A0") === 501L)
       assert(last("A1") === 2L)

@@ -81,8 +81,8 @@ class CountQueryObservationSpec extends AnyFunSuite {
     // the rescaled generation still planned its state over 8 partitions
     val offsets = new String(Files.readAllBytes(root.resolve("gen1/offsets/0")))
     assert(offsets.contains("\"spark.sql.shuffle.partitions\":\"8\""), offsets)
-    val counts = session.table("conf_leak_sink").collect()
-      .groupBy(_.getString(0)).map { case (k, v) => k -> v.map(_.getLong(1)).max }
+    val counts = ReconfigurableCountQuery.readFileSink(session, rq.sinkDir)
+      .collect().map(t => t.key -> t.value).toMap
     assert(counts === (0 until 10).map(k => s"A$k" -> 2L).toMap)
   }
 }

@@ -2,43 +2,7 @@ package graft.controlplane
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
-import graft.model.KeyedTuple
-
 class KeygroupRouterSpec extends AnyFunSuite {
-  private lazy val spark = SparkTestSession.spark
-
-  test("explicit keygroup assignment controls partition placement") {
-    import spark.implicits._
-    val data = (0 until 1000).map(i => KeyedTuple(s"K$i", i.toLong))
-    val ds = spark.createDataset(data)
-    // all keygroups to partition 0 except keygroup 0 → partition 1
-    val assignment = Vector.tabulate(128)(kg => if (kg == 0) 1 else 0)
-    val routed = KeygroupRouter.route[KeyedTuple](ds, _.key, assignment, 2)
-    val inv = KeygroupRouter.partitionInventory[KeyedTuple](routed, _.key)
-    assert(inv.getOrElse(1, Set.empty).subsetOf(Set(0)))
-    assert(!inv.getOrElse(0, Set.empty).contains(0))
-    // no rows lost in routing
-    assert(routed.count() === 1000)
-  }
-
-  test("over-range assignment clamps crash-free AND counts each clamp") {
-    // stale post-scale-in plans clamp silently-but-visibly: the
-    // partitioner must keep the shuffle alive (last partition) while
-    // the accumulator records every clamp so a PERSISTENTLY mis-built
-    // assignment can't hide behind the scale-in tolerance
-    val acc = spark.sparkContext.longAccumulator("test.clamps")
-    val part = new KeygroupRouter.AssignedKeygroupPartitioner(
-      Array(0, 5, 1, 7), numPartitions = 2, clampCount = Some(acc))
-    assert(part.getPartition(0) === 0) // in range: untouched, uncounted
-    assert(part.getPartition(1) === 1) // 5 >= 2 -> clamp
-    assert(part.getPartition(2) === 1) // in range (== last partition)
-    assert(part.getPartition(3) === 1) // 7 >= 2 -> clamp
-    assert(acc.value === 2L, "only genuine clamps may count")
-    // outside the assignment range stays a loud error
-    intercept[IllegalArgumentException](part.getPartition(4))
-  }
-
   test("round-robin remap balances keygroups (PerformanceEvaluator policy)") {
     val rr = KeygroupRouter.roundRobin(128, 4)
     assert(rr.toSet === Set(0, 1, 2, 3))

@@ -43,8 +43,8 @@ class ReconfigurationSpec extends AnyFunSuite {
     stream.addData(tuples(0 until 10, 2): _*)
     rq.processAllAvailable()
 
-    val finalCounts = spark.table("reconfig_sink").as[KeyedTuple]
-      .collect().groupBy(_.key).map { case (k, v) => k -> v.map(_.value).max }
+    val finalCounts = ReconfigurableCountQuery.readFileSink(spark, rq.sinkDir)
+      .collect().map(t => t.key -> t.value).toMap
     rq.stop()
     assert(finalCounts === (0 until 10).map(k => s"A$k" -> 5L).toMap)
   }
@@ -68,8 +68,8 @@ class ReconfigurationSpec extends AnyFunSuite {
     stream.addData(tuples(0 until 4, 1): _*) // +2 per event under countV2
     rq.processAllAvailable()
 
-    val finalCounts = spark.table("col_sink").as[KeyedTuple]
-      .collect().groupBy(_.key).map { case (k, v) => k -> v.map(_.value).max }
+    val finalCounts = ReconfigurableCountQuery.readFileSink(spark, rq.sinkDir)
+      .collect().map(t => t.key -> t.value).toMap
     rq.stop()
     assert(finalCounts === (0 until 4).map(k => s"A$k" -> 4L).toMap)
   }
@@ -100,8 +100,8 @@ class ReconfigurationSpec extends AnyFunSuite {
     // counts continue exactly from the in-place state
     stream.addData(tuples(0 until 10, 2): _*)
     rq.processAllAvailable()
-    val finalCounts = spark.table("ro_sink").as[KeyedTuple]
-      .collect().groupBy(_.key).map { case (k, v) => k -> v.map(_.value).max }
+    val finalCounts = ReconfigurableCountQuery.readFileSink(spark, rq.sinkDir)
+      .collect().map(t => t.key -> t.value).toMap
     rq.stop()
     assert(finalCounts === (0 until 10).map(k => s"A$k" -> 5L).toMap)
   }
@@ -140,8 +140,8 @@ class ReconfigurationSpec extends AnyFunSuite {
 
     stream.addData(tuples(0 until 10, 1): _*) // +2 per event under countV2
     rq.processAllAvailable()
-    val finalCounts = spark.table("pin_sink").as[KeyedTuple]
-      .collect().groupBy(_.key).map { case (k, v) => k -> v.map(_.value).max }
+    val finalCounts = ReconfigurableCountQuery.readFileSink(spark, rq.sinkDir)
+      .collect().map(t => t.key -> t.value).toMap
     rq.stop()
     assert(finalCounts === (0 until 10).map(k => s"A$k" -> 6L).toMap)
   }
@@ -386,8 +386,8 @@ class ReconfigurationSpec extends AnyFunSuite {
       // counts continue from 2 and now advance by 2 per event
       stream.addData(tuples(0 until 4, 1): _*)
       rq.processAllAvailable()
-      val finalCounts = spark.table("src_sink").as[KeyedTuple]
-        .collect().groupBy(_.key).map { case (k, v) => k -> v.map(_.value).max }
+      val finalCounts = ReconfigurableCountQuery.readFileSink(spark, rq.sinkDir)
+        .collect().map(t => t.key -> t.value).toMap
       assert(finalCounts === (0 until 4).map(k => s"A$k" -> 4L).toMap)
     } finally {
       endpoint.stop()
@@ -417,5 +417,40 @@ class ReconfigurationSpec extends AnyFunSuite {
     // second call: script exhausted
     assert(controller.onBatch(rq, 1L, Map.empty).isEmpty)
     rq.stop()
+  }
+
+  /** A keygroup → task vector is checked when it is staged: routing
+    * has no token for a task outside [0, parallelism) or for a missing
+    * keygroup, and `execute` only reaches the routing after the
+    * running query is stopped. */
+  test("malformed keygroup assignments are rejected and leave the pipeline running") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val checkpointRoot = Files.createTempDirectory("reconfig-bad").toString
+    val stream = MemoryStream[KeyedTuple]
+    val rq = new ReconfigurableCountQuery(spark, () => stream.toDS(),
+      checkpointRoot, "bad_assign", initialParallelism = 2)
+    rq.start()
+    try {
+      stream.addData(tuples(0 until 10, 1): _*)
+      rq.processAllAvailable()
+      val running = rq.getPlan
+      val rr = KeygroupRouter.roundRobin(128, 2)
+      Seq("a negative task" -> rr.updated(5, -1),
+          "a task equal to the parallelism" -> rr.updated(5, 2),
+          "64 entries for 128 keygroups" -> rr.take(64)).foreach {
+        case (what, assignment) =>
+          val e = intercept[IllegalArgumentException](
+            rq.assignWorkload(rq.OperatorName, assignment))
+          assert(e.getMessage.contains(rq.OperatorName), what)
+          val r = rq.execute(s"after $what")
+          assert(r.reason.contains("no-op") && rq.getPlan === running, what)
+      }
+      stream.addData(tuples(0 until 10, 1): _*)
+      rq.processAllAvailable()
+      val counts = ReconfigurableCountQuery.readFileSink(spark, rq.sinkDir)
+        .collect().map(t => t.key -> t.value).toMap
+      assert(counts === (0 until 10).map(k => s"A$k" -> 2L).toMap)
+    } finally rq.stop()
   }
 }

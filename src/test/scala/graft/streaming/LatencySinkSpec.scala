@@ -7,34 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 
-/** The latency-counting sink measures per-batch `now − max(event ts)`
-  * — the DummyLatencyCountingSink analog. */
+/** End-to-end latency is measured per batch as `batch end − max(event
+  * ts)` — the DummyLatencyCountingSink analog. */
 class LatencySinkSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   case class Ev(ts: Timestamp, v: Long)
-
-  test("foreachBatch latency sink records per-batch samples") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val in = MemoryStream[Ev]
-    val sink = new Metrics.LatencySink("ts")
-    val q = in.toDF().writeStream.outputMode("append")
-      .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-        sink(df, id))
-      .start()
-    try {
-      val emit = System.currentTimeMillis() - 1500 // emitted 1.5 s ago
-      in.addData(Ev(new Timestamp(emit), 1), Ev(new Timestamp(emit - 100), 2))
-      q.processAllAvailable()
-      val samples = sink.all
-      assert(samples.nonEmpty)
-      val s = samples.head
-      assert(s.rows === 2)
-      // latency = now − max(ts): at least the 1.5 s age, and sane
-      assert(s.latencyMs >= 1500 && s.latencyMs < 120000, s.toString)
-    } finally q.stop()
-  }
 
   /** The listener-side channel StreamBench's percentiles come from:
     * `observeSourceTs` attaches max(source ts) as an observed metric

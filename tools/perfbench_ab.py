@@ -11,7 +11,9 @@ commit, so its benchmark build is reused); the change side is this
 checkout as it stands. For each seed, `perfbench/run.py` runs once in
 each tree, untraced and for BENCHMARK.json's `run_seconds`, one pair per
 seed, the side that goes first alternating from pair to pair. Every run's result line goes to the JSONL file with its
-seed, side, order and host stamps, so pairs from several calls add up.
+seed, side, order and host stamps, so pairs from several calls add up;
+a log that already holds runs of the workload against another parent
+is refused, so pairs against different parents are never judged together.
 
 The report covers every pair of the workload in the file. Per metric it prints each side's q1/median/q3
 (`statistics.quantiles(n=4)`), the change's wins (ties count for
@@ -177,8 +179,15 @@ def main() -> None:
         jsonl = a.jsonl or os.path.join(ROOT, ".bench_build", "perfbench_ab", f"{a.workload}.jsonl")
         os.makedirs(os.path.dirname(os.path.abspath(jsonl)), exist_ok=True)
         rows = [json.loads(l) for l in open(jsonl) if l.strip()] if os.path.exists(jsonl) else []
-        trees = {"parent": export(a.rev), "change": ROOT}
         parent_sha = git("rev-parse", "--verify", a.rev + "^{commit}")
+        # the report pairs every row of the workload, so one log holds one parent
+        other = {str(r.get("parent_rev", "unrecorded")) for r in rows
+                 if r["workload"] == a.workload} - {parent_sha}
+        if other:
+            sys.exit(f"{jsonl} already holds {a.workload} runs against parent "
+                     f"{', '.join(sorted(other))}, not {parent_sha}; "
+                     "pass another --jsonl or move that file away")
+        trees = {"parent": export(a.rev), "change": ROOT}
         first = max((r["pair"] for r in rows), default=-1) + 1
         for i, seed in enumerate(a.seeds):
             pair = first + i
