@@ -1,17 +1,19 @@
 package graft
 
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.JsonGenerator
+import com.fasterxml.jackson.databind.SerializerProvider
+import com.fasterxml.jackson.databind.module.SimpleModule
+import com.fasterxml.jackson.databind.ser.std.StdSerializer
 import org.apache.spark.sql.SparkSession
 
 import graft.StageRecorder.RowProfile
 
-/** Benchmark main — driver runs this per round against
-  * SPARK_GRAFT_SF_DIR (default sf0.1) and records the one-line JSON.
-  *
-  * Prints exactly one JSON line:
-  * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}
-  */
+/** Batch benchmark main: sweeps [[SparkEntry.benchRows]] against
+  * SPARK_GRAFT_SF_DIR (default sf0.1), writes the full record and
+  * prints it, then prints the summary line LAST (see [[LegRecord]]). */
 object Bench {
 
   private[graft] def session(): SparkSession = {
@@ -63,6 +65,14 @@ object Bench {
     (sec, out, profile)
   }
 
+  /** The `repeats` argument: an integer >= 1, or a failure naming it. */
+  private[graft] def parseRepeats(arg: String): Int = {
+    val repeats = arg.trim.toIntOption.getOrElse(throw
+      new IllegalArgumentException(s"repeats must be an integer, got '$arg'"))
+    require(repeats >= 1, s"repeats must be >= 1, got $repeats")
+    repeats
+  }
+
   def main(args: Array[String]): Unit = {
     // local profiling knobs (driver passes no args): args(0) = comma-
     // separated substring filters on query names ("-" prefix excludes;
@@ -73,8 +83,9 @@ object Bench {
     val matches = (name: String) =>
       (includes.isEmpty || includes.exists(name.contains)) &&
         !excludes.exists(e => name.contains(e.drop(1)))
-    val repeats = if (args.length > 1) args(1).toInt else 1
-    require(repeats >= 1, s"repeats must be >= 1, got $repeats")
+    require(SparkEntry.benchRows.exists(r => matches(r.name)),
+      s"name filter '${args(0)}' matches no bench row")
+    val repeats = if (args.length > 1) parseRepeats(args(1)) else 1
     val spark = session()
     runLeg(spark, matches, repeats,
       sfDir,
@@ -98,181 +109,7 @@ object Bench {
     // warm the JVM + parquet footers once with the flagship query
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
 
-    // scale-bench overrides: oracle-gated entries whose gates pin
-    // parameters to the static sf0.01 oracle (and refuse larger
-    // corpora so a silent divergence can't pass the gate) are benched
-    // through their auto-scaling production forms instead
-    val benchForms: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      Map(
-        "sim_near_dup_lsh" ->
-          ((s, d) => graft.operators.AnnLsh.nearDupLsh(s, d)),
-        "sim_ann_lsh" ->
-          ((s, d) => graft.operators.AnnLsh.annTopKScaled(s, d)),
-        "sim_ann_multiprobe" ->
-          ((s, d) => graft.operators.AnnLsh.annMultiProbeScaled(s, d)),
-        // the oracle form's 6-bit width gate refuses corpora past
-        // 2048 vectors (pinned static SQL); the bench runs the
-        // auto-width production pipeline, like the two entries above
-        "sim_sem_dedup" ->
-          ((s, d) => graft.operators.SemDedup.semDedupScaled(s, d)),
-        // exact-form guards: the _pruned twins below set the topK
-        // confs at construction, which would otherwise leak into the
-        // exact forms on the next sweep/dir — pin them unset here
-        "t_lm_perplexity" -> ((s, d) => {
-          s.conf.unset("spark.graft.lm.topK")
-          graft.operators.TextQueries.lmPerplexity(s, d)
-        }),
-        "t_quality_classifier" -> ((s, d) => {
-          s.conf.unset("spark.graft.nb.topK")
-          graft.operators.TextQueries.qualityClassifier(s, d)
-        }),
-        // r15: the TRAINED codebooks are the benched PQ defaults — the
-        // repo's own planted-cluster recall table showed the untrained
-        // SQL-replayable models losing to their trained siblings 3-5×
-        // (0.06-0.16 vs 0.44-0.76 recall@5 across SFs), an
-        // anti-default. The oracle gate (Verify) still runs the
-        // replayable untrained forms under these names; the untrained
-        // models stay benched as the explicit _baseline rows below.
-        "sim_ivfpq_topk" -> ((s, d) =>
-          graft.operators.AnnIvfPq.ivfPqTopKTrained(s, d)),
-        "sim_ivfpq_refine" -> ((s, d) =>
-          graft.operators.AnnIvfPq.ivfPqRefineTopKTrained(s, d)),
-        "sim_pq_adc_topk" -> ((s, d) =>
-          graft.operators.AnnPq.pqAdcTopKTrained(s, d)))
-
-    // Bench-only rows: the production corpus-model forms (fixed-size
-    // top-K model tables with smoothed backoff — the 100 TB shape)
-    // benched ALONGSIDE the exact oracle forms, so the artifact
-    // carries a measured curve for both. Not part of SparkEntry
-    // .queries (the oracle gate runs the exact default-conf forms).
-    val extraQueries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      Map(
-        "t_lm_perplexity_pruned" -> ((s, d) => {
-          s.conf.set("spark.graft.lm.topK", "262144")
-          graft.operators.TextQueries.lmPerplexity(s, d)
-        }),
-        "t_quality_classifier_pruned" -> ((s, d) => {
-          s.conf.set("spark.graft.nb.topK", "262144")
-          graft.operators.TextQueries.qualityClassifier(s, d)
-        }),
-        // the amortized side of the pay-once layout trade: runs after
-        // the cold row (alphabetical order), so ensureBucketed serves
-        // from the session memo and this times the exchange-free READ
-        // path — the cost every query after the first pays at 100 TB
-        "layout_bucketed_join_warm" -> ((s, d) =>
-          graft.sources.BucketedLayout.bucketedJoin(s, d)),
-        // the untrained SQL-replayable PQ models, demoted to explicit
-        // _baseline rows (the oracle gate's forms; the canonical
-        // sim_ivfpq_topk / sim_pq_adc_topk bench rows run the trained
-        // production models since r15 — see benchForms above) — kept
-        // benched so the artifact still carries both sides' cost and
-        // the recall section both sides' retrieval quality
-        "sim_ivfpq_baseline" -> ((s, d) =>
-          graft.operators.AnnIvfPq.ivfPqTopK(s, d)),
-        // the recall-hungry routing point (nprobe = nlist/4, kf=4 —
-        // 0.92 recall where the default breadth plateaus at 0.84 on
-        // the planted fixture): recorded as a row so the recall/cost
-        // knee is measured at the bench SFs, not just the curve grid
-        "sim_ivfpq_refine_wide" -> ((s, d) =>
-          graft.operators.AnnIvfPq.ivfPqRefineTopKTrainedWide(s, d)),
-        "sim_pq_adc_baseline" -> ((s, d) =>
-          graft.operators.AnnPq.pqAdcTopK(s, d)),
-        // the production convergence form beside the fixed-3-iteration
-        // oracle form; iteration count goes to stderr next to the row.
-        // The between-query cleanup has unpersisted the packed blocks
-        // the oracle row built while its memo entry still holds them —
-        // release it so this row is a self-contained production run:
-        // adjacency build + persist + iterate-to-ε, all timed
-        "graph_pagerank_converged" -> ((s, d) => {
-          graft.operators.GraphQueries.releaseAdjacency(s, d)
-          val cr = graft.operators.GraphQueries.pageRankConverged(s, d)
-          System.err.println(s"[bench] pageRankConverged: ${cr.iters} " +
-            s"iterations, converged=${cr.converged} (eps=0.1% of max rank)")
-          cr.ranks
-        }))
-
-    // Queries whose CONSTRUCTION performs real MEMOIZED
-    // model/materialization work: the CC family materializes the
-    // shared cluster-label table (DedupQueries.simhashClusters memo).
-    // Two bench rules keep that honest: (1) they are never warmed at
-    // the bench SF — the work stays inside the timed sweep (for the CC
-    // memo, charged to the family's first query; the other two reuse
-    // it, the sweep semantics the sharing is FOR); (2) with repeats >
-    // 1 they report the FIRST repeat, not the min — a later CC repeat
-    // hits the memo and would report only the parquet-read tail.
-    // NOTE the text-scorer forms (t_lm_perplexity /
-    // t_quality_classifier AND their _pruned twins) are deliberately
-    // NOT here: all four rebuild their corpus model inside every
-    // repeat (the pruned twins re-collect the K-bounded model each
-    // construction — no memo, no scratch table), so min-over-repeats
-    // hides nothing. Listing them here just reported one-time JIT as
-    // if it were query cost (r10 measured the classifier at 9.3 s
-    // first repeat vs 6.4 s steady-state for exactly that reason; the
-    // pruned twins were de-listed in r11 on the same argument).
-    val heavyConstruction =
-      Set("dedup_clusters", "dedup_simhash_pairs", "pipeline_keep",
-        "pipeline_keep_best",
-        // constructing this one MATERIALIZES the bucketed fact-table
-        // copies (the write-side cost the co-location lever trades
-        // for) — it must be paid inside the first timed repeat, not
-        // vanish into the untimed warm-up. The _warm twin is here for
-        // the warm-up EXCLUSION only (constructing it at the bench SF
-        // during warm-up would materialize the copies untimed and rob
-        // the cold row): in the timed sweep it runs after the cold
-        // row, so its first repeat is already the memoized read path
-        // it exists to measure.
-        "layout_bucketed_join", "layout_bucketed_join_warm",
-        // the embedding near-dup pair memo: built by the family's
-        // first timed query, reused by the rest — warming it at the
-        // bench SF would hide the family's dominant cost untimed
-        "sim_near_dup_lsh", "sim_sem_dedup",
-        // the IVF quantizer (count + sample + k-means + centroid
-        // broadcast) is construction-memoized per table version —
-        // the first repeat pays the training, later ones must not
-        // hide it
-        "sim_ann_ivf",
-        // the packed pagerank adjacency (orders⋈lineitem→distinct →
-        // persisted CSR blocks) is construction-memoized per table
-        // version — same rule; construction also runs the loop
-        "graph_pagerank",
-        // CONSTRUCTION runs the whole iterate-to-convergence loop and
-        // (its bench form releases the memo first) the adjacency build
-        "graph_pagerank_converged",
-        // Lloyd training (sample collect + coarse & per-subspace
-        // k-means) is construction-memoized — first repeat pays it.
-        // Since r15 these canonical names BENCH the trained models
-        // (benchForms), so the training cost lands here.
-        "sim_ivfpq_topk", "sim_ivfpq_refine", "sim_pq_adc_topk",
-        // here for the warm-up EXCLUSION only (like the _warm layout
-        // row): constructing it at the bench SF during warm-up would
-        // train the shared -refine model untimed and rob
-        // sim_ivfpq_refine's first repeat; in the timed sweep it runs
-        // after that provider, timing pure wide-breadth search
-        "sim_ivfpq_refine_wide",
-        // quantileSelect's CONSTRUCTION runs its driver-side control
-        // jobs (bounds + histogram + sub-histogram — 3 corpus scans);
-        // not memoized (each repeat honestly rebuilds), but the
-        // warm-up sweep must not execute corpus-scale work it only
-        // means to plan, and min-over-repeats hides nothing since
-        // every repeat pays the identical build
-        "t_quantile_select")
-
-    // Memo-reusing row -> the earlier row whose timed construction its
-    // checked-in history assumes already ran (full sweeps guarantee it
-    // by alphabetical order). Used to exempt exactly these rows from
-    // the history tripwire when a name filter drops their provider —
-    // their first repeat then pays a construction the history recorded
-    // warm, an accounting artifact no probe should flag. Rows NOT here
-    // are warmth-comparable in any filter: they train into their own
-    // memo slot (the PQ legs since r16), release-and-rebuild
-    // explicitly (graph_pagerank_converged), or get their provider's
-    // work done untimed by the warm-only guard (layout_..._warm).
-    val memoProviders: Map[String, String] = Map(
-      "dedup_simhash_pairs" -> "dedup_clusters",
-      "pipeline_keep" -> "dedup_clusters",
-      "pipeline_keep_best" -> "dedup_clusters",
-      "sim_sem_dedup" -> "sim_near_dup_lsh",
-      "sim_ivfpq_refine_wide" -> "sim_ivfpq_refine")
+    val rows = SparkEntry.benchRows.filter(r => matches(r.name))
 
     // Warm-up sweep (untimed): construct every query once against the
     // bench dir — this performs the construction-time memo scans (LSH
@@ -288,16 +125,12 @@ object Bench {
         (if (tiny.isDirectory && tiny.getPath != sfDir) Seq(tiny.getPath)
          else Seq.empty) :+ sfDir
       warmDirs.foreach { d =>
-        (SparkEntry.queries ++ extraQueries).toSeq.sortBy(_._1)
-          .filter(q => matches(q._1))
-          .filter(q => d != sfDir || !heavyConstruction(q._1))
-          .foreach { case (name, entryFn) =>
-            val fn = benchForms.getOrElse(name, entryFn)
-            try {
-              val df = fn(spark, d)
-              if (d != sfDir) df.count() // execute only at the tiny SF
-            } catch { case _: Throwable => }
-          }
+        rows.filter(r => d != sfDir || !r.memoized).foreach { r =>
+          try {
+            val df = r.timed(spark, d)
+            if (d != sfDir) df.count() // execute only at the tiny SF
+          } catch { case _: Throwable => }
+        }
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
@@ -335,10 +168,6 @@ object Bench {
     // clean.
     val calibMidLimit = StreamGuard.limitFromEnv(
       "SPARK_GRAFT_CALIB_MID_LIMIT", calibLimit / 5.0)
-    def family(n: String): String = {
-      val p = n.takeWhile(_ != '_')
-      if (p.matches("q\\d+")) "q" else if (p.matches("e\\d*")) "e" else p
-    }
     val midProbes = scala.collection.mutable.ArrayBuffer[(String, Double)]()
     var prevFamily: String = null
 
@@ -426,8 +255,7 @@ object Bench {
     val (stealBefore, iowaitBefore) = StreamGuard.hostStealIo()
     val sweepStartNs = System.nanoTime()
 
-    val timedNames = (SparkEntry.queries ++ extraQueries).keySet
-      .filter(matches)
+    val timedNames = rows.map(_.name).toSet
     // A name filter that selects the _warm layout row WITHOUT its cold
     // twin would charge the one-time bucketed materialization to the
     // first (reported) "warm" repeat — construct the copies untimed
@@ -452,9 +280,8 @@ object Bench {
     // the layer record of each row's reported repeat, for the full record
     val recorder = new StageRecorder().register(spark)
     val profiles = scala.collection.mutable.LinkedHashMap[String, RowProfile]()
-    val results = (SparkEntry.queries ++ extraQueries).toSeq.sortBy(_._1)
-      .filter(q => matches(q._1))
-      .map { case (name, entryFn) =>
+    val results = rows.map { row =>
+      val name = row.name
       val fam = family(name)
       if (prevFamily != null && fam != prevFamily) {
         val t = StreamGuard.probe(spark)
@@ -465,7 +292,7 @@ object Bench {
             "host degraded mid-sweep; this leg will self-report flagged")
       }
       prevFamily = fam
-      val fn = benchForms.getOrElse(name, entryFn)
+      val form = row.timed
       var sec = Double.MaxValue
       var ok = true
       var skipped = false
@@ -474,7 +301,7 @@ object Bench {
       // (min-over-repeats never applies), so further repeats could only
       // burn sweep wall time re-reading memos — skip them outright
       // (pageRankConverged alone would re-run its 47-iteration loop)
-      var planned = if (heavyConstruction(name)) 1 else repeats
+      var planned = if (row.memoized) 1 else repeats
       // per-ROW steal meter: the sweep-level guard can only say "some
       // window was contaminated"; sampling /proc/stat around each row
       // localizes a mid-sweep host event to the rows it actually hit
@@ -485,7 +312,7 @@ object Bench {
       while (rep < planned) {
         rep += 1
         val (t, outcome, profile) =
-          timedRepeat(recorder, spark, name)(fn(spark, sfDir).count())
+          timedRepeat(recorder, spark, name)(form(spark, sfDir).count())
         ok = outcome match {
           case Right(_) => ok
           // a DESIGNED refusal (e.g. the exact all-pairs form past
@@ -500,7 +327,7 @@ object Bench {
         // construction-memoized queries, which report the first (cold)
         // repeat so the memoized work can't vanish from the number.
         // The row's profile is the reported repeat's.
-        val reported = if (heavyConstruction(name)) rep == 1 else t < sec
+        val reported = if (row.memoized) rep == 1 else t < sec
         if (reported) {
           sec = t
           profiles(name) = profile
@@ -512,10 +339,10 @@ object Bench {
         // extend it to three repeats so the reported min is a stable
         // figure — cost is < 2·3 s per fast row. repeats=1 driver runs
         // are untouched (extension would change their accounting), as
-        // are heavyConstruction rows (they report the first repeat by
-        // contract, which extension cannot stabilize).
+        // are memoized rows (they report the first repeat by contract,
+        // which extension cannot stabilize).
         if (rep == planned && planned < 3 && repeats > 1 &&
-            !heavyConstruction(name) && ok && !skipped && sec < 3.0)
+            !row.memoized && ok && !skipped && sec < 3.0)
           planned = 3
         if (repeats > 1) {
           System.err.println(f"[bench] $name $t%.3f s")
@@ -560,18 +387,11 @@ object Bench {
           "time as contaminated")
       val histPrev = historyTimes.getOrElse(name, 0.0)
       val tripRatio = Bench.tripRatioFor(histPrev)
-      // Memo-REUSING rows' first-repeat accounting assumes their
-      // PROVIDER row ran earlier in the sweep (full sweeps — the runs
-      // history is refreshed from — guarantee it by alphabetical
-      // order); a NAME-FILTERED run that drops the provider makes the
-      // reuser pay a construction its history recorded warm, so its
-      // tripwire would fire on an accounting artifact, not the host or
-      // the code. Exempt exactly those rows — every self-contained
-      // heavyConstruction row (its own memo slot, or an explicit
-      // release-and-rebuild like graph_pagerank_converged) keeps its
-      // tripwire on filtered runs too.
+      // a name filter that drops a memo reuser's provider makes the
+      // reuser pay a construction its history recorded warm: an
+      // accounting artifact, not the host or the code, so no trip
       val warmthComparable =
-        !(filtered && memoProviders.get(name).exists(p => !matches(p)))
+        !(filtered && row.memoProvider.exists(p => !matches(p)))
       if (ok && !skipped && warmthComparable &&
           histPrev >= 0.3 && sec > tripRatio * histPrev) {
         val ratio = sec / histPrev
@@ -589,8 +409,8 @@ object Bench {
           (if (probe > calibMidLimit) "host degraded, leg self-reports flagged"
            else "probe clean: investigate this row as a real regression"))
       }
-      (name, if (!ok) -1.0 else if (skipped) Double.NaN else sec, rep,
-        rowStealFrac)
+      RowResult(name, if (!ok) -1.0 else if (skipped) Double.NaN else sec,
+        rep, rowStealFrac)
     }
     val sweepWallSec = (System.nanoTime() - sweepStartNs) / 1e9
     recorder.unregister(spark)
@@ -644,8 +464,7 @@ object Bench {
     // the neighbors. SPARK_GRAFT_RECALL=off skips (e.g. huge SFs).
     val recall: Seq[(String, Double)] =
       if (sys.env.getOrElse("SPARK_GRAFT_RECALL", "on") == "off") Seq.empty
-      else try graft.operators.AnnRecall.recallAtK(spark, sfDir,
-        (SparkEntry.queries ++ extraQueries).keySet.filter(matches))
+      else try graft.operators.AnnRecall.recallAtK(spark, sfDir, timedNames)
       catch { case e: Throwable =>
         System.err.println(s"[bench] recall computation failed: $e")
         Seq.empty
@@ -673,37 +492,10 @@ object Bench {
             None
           }
         }
-    // Artifact contract: the driver keeps only a short stdout tail, so
-    // the LAST line is a compact (<2 KB) self-describing summary —
-    // total, count, per-family sums, worst-5, skips/errors, and the
-    // path of the full per-query record this main also writes.
-    // Locale-pinned number formatting: the f interpolator uses the
-    // JVM's default locale, and a comma-decimal locale (de_DE, fr_FR)
-    // would render {"value":1,234} — invalid JSON, losing the round's
-    // bench record to the driver's parse.
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def j(v: Double): String = if (v.isNaN) "null" else num(v)
-    // JSON string escape (same contract as Verify's): env-supplied
-    // paths and builder-authored names must never break the artifact
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val measured = results.filter(r => !r._2.isNaN && r._2 >= 0)
-    val skippedNames = results.filter(_._2.isNaN).map(_._1)
-    val errorNames = results.filter(_._2 == -1.0).map(_._1)
-    val total = measured.map(_._2).sum
     // cross-round comparability: rounds ADD rows, so the raw total is
-    // not comparable with the previous round's — stamp the total over
-    // the intersection with the PREVIOUS round's measured query set
-    // (checked-in snapshot, refreshed each round) so the "subtract the
-    // new rows" arithmetic lives in the artifact, not in a footnote
+    // not comparable with the previous round's — the record stamps the
+    // total over the intersection with the PREVIOUS round's measured
+    // query set (checked-in snapshot, refreshed each round)
     val prevQueries: Set[String] =
       try {
         val path = sys.env.getOrElse("SPARK_GRAFT_PREV_QUERIES",
@@ -711,74 +503,12 @@ object Bench {
         Json.readFile(path).get("queries").elements().asScala
           .map(_.asText).toSet
       } catch { case _: Throwable => Set.empty }
-    val comparable = measured.filter(r => prevQueries(r._1))
-    val comparableTotal = comparable.map(_._2).sum
-    val comparableJson =
-      s""""comparable_total":${num(comparableTotal)},""" +
-        s""""comparable_n":${comparable.size}"""
-    val qs = results.map { case (k, v, _, _) => q(k) + ":" + j(v) }
-      .mkString("{", ",", "}")
-    val repsJson = results.map { case (k, _, r, _) => q(k) + ":" + r }
-      .mkString("{", ",", "}")
-    // per-row steal (full record only): which rows a mid-sweep host
-    // event actually touched
-    val stealRows = results.filter(_._4 > 0.05)
-    val rowStealJson = stealRows
-      .map { case (k, _, _, f) => q(k) + ":" + num(f) }
-      .mkString("{", ",", "}")
-    val arr = (xs: Seq[String]) => xs.map(q).mkString("[", ",", "]")
-    val coloadJson =
-      s"""{"other_jvm_cpu_sec":${num(otherJvmCpuSec)},""" +
-        s""""frac":${num(coloadFrac)},"steal_sec":${num(stealSec)},""" +
-        s""""steal_frac":${num(stealFrac)},"iowait_sec":${num(iowaitSec)},""" +
-        s""""load1_before":${num(loadBefore)},""" +
-        s""""load1_after":${num(loadAfter)},""" +
-        s""""rows_steal_flagged":${stealRows.size},"flagged":$coloadFlag}"""
-    val recallJson = recall.map { case (k, v) => q(k) + ":" + j(v) }
-      .mkString("{", ",", "}")
-    val structuredJson = structured match {
-      case None => "null"
-      case Some((d, r)) =>
-        val legsJ = r.legs.map { case (k, v) => q(k) + ":" + j(v) }
-          .mkString("{", ",", "}")
-        def curveJ(c: Seq[graft.operators.AnnRecall.NprobePoint]): String =
-          c.map(p =>
-            s"""{"nprobe":${p.nprobe},"scan_frac":${num(p.scanFrac)},""" +
-              s""""recall":${j(p.recall)}}""").mkString("[", ",", "]")
-        val orAmpJ = r.orAmp.map(p =>
-          s"""{"tables":${p.tables},"bits":${p.bits},""" +
-            s""""index_rows":${p.indexRows},"cand_pairs":${p.candPairs},""" +
-            s""""recall":${j(p.recall)}}""").mkString("[", ",", "]")
-        val refineJ = r.refineCurve.map(p =>
-          s"""{"k_factor":${p.kFactor},"nprobe":${p.nprobe},""" +
-            s""""scan_frac":${num(p.scanFrac)},"recall":${j(p.recall)}}""")
-          .mkString("[", ",", "]")
-        s"""{"dir":${q(d)},"legs":$legsJ,""" +
-          s""""negctrl_ivfpq_trained":${j(r.negControl)},""" +
-          s""""nlist":${r.nlist},"nprobe_curve":${curveJ(r.curve)},""" +
-          s""""alt_nlist":${r.altNlist},""" +
-          s""""alt_nprobe_curve":${curveJ(r.altCurve)},""" +
-          s""""ivf_nlist":${r.ivfNlist},""" +
-          s""""ivf_nprobe_curve":${curveJ(r.ivfCurve)},""" +
-          s""""lsh_or_amp":$orAmpJ,"refine_curve":$refineJ}"""
-    }
-    val calibMidJson = midProbes
-      .map { case (f, t) => q(f) + ":" + num(t) }.mkString("{", ",", "}")
-    val historyTripsJson = historyTrips
-      .map { case (n, r, p) =>
-        s"""{"row":${q(n)},"ratio":${num(r)},"probe_sec":${num(p)}}""" }
-      .mkString("[", ",", "]")
-    val full =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,""" +
-        s""""reps":$repsJson,"row_steal":$rowStealJson,""" +
-        s""""skipped":${arr(skippedNames)},"errors":${arr(errorNames)},""" +
-        s""""calib_sec":${num(calibSec)},"calib_end_sec":${num(calibEndSec)},""" +
-        s""""calib_mid":$calibMidJson,"calib_mid_limit":${num(calibMidLimit)},""" +
-        s""""history_trips":$historyTripsJson,""" +
-        s""""coload":$coloadJson,""" +
-        s""""recall":$recallJson,"recall_structured":$structuredJson,""" +
-        s""""profile":${Json.mapper.writeValueAsString(profiles)},""" +
-        s"""$comparableJson,"sf":${q(sfDir)}}"""
+    val record = LegRecord(results, calibSec, calibEndSec, midProbes.toSeq,
+      calibMidLimit, historyTrips.toSeq,
+      Coload(otherJvmCpuSec, coloadFrac, stealSec, stealFrac, iowaitSec,
+        loadBefore, loadAfter, results.count(_.stealFrac > 0.05), coloadFlag),
+      recall, structured, profiles, prevQueries, fullPath, sfDir)
+    val full = record.full
     try java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
       (full + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>
@@ -801,42 +531,121 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] keyed full-record write failed: $e") }
     println(full) // kept on stdout too for local runs; summary is LAST
-    val fams = measured.groupBy(r => family(r._1)).toSeq
-      .map { case (f, rs) => f -> rs.map(_._2).sum }.sortBy(-_._2)
-      .map { case (f, v) => q(f) + ":" + j(v) }.mkString("{", ",", "}")
-    val worst = measured.sortBy(-_._2).take(5)
-      .map { case (k, v, _, _) => q(k) + ":" + j(v) }.mkString("{", ",", "}")
-    // Driver tail contract: the driver keeps only the LAST 2000 chars
-    // of stdout and parses the last complete JSON line found there.
-    // r15-r17 lost their bench records because recall_structured grew
-    // this line past 2000 chars (r17: 3387). The structured recall
-    // curves now live ONLY in the full record (fullPath, printed
-    // above); the summary is length-guarded — if it ever outgrows the
-    // budget, progressively heavy optional fields are dropped rather
-    // than silently breaking the driver's parse. A full per-query map
-    // can never fit: the 123 query names alone sum to 1915 chars.
-    def summaryLine(withRecall: Boolean, withWorst: Boolean): String =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","n":${measured.size},""" +
-        s""""families":$fams,""" +
-        (if (withWorst) s""""worst5":$worst,""" else "") +
-        s""""skipped":${arr(skippedNames)},""" +
-        s""""errors":${arr(errorNames)},"calib_sec":${num(calibSec)},""" +
-        s""""calib_end_sec":${num(calibEndSec)},""" +
-        s""""calib_mid_max":${num(calibMidMax)},""" +
-        s""""history_trips_n":${historyTrips.size},""" +
-        s""""coload":$coloadJson,""" +
-        (if (withRecall) s""""recall":$recallJson,""" else "") +
-        s"""$comparableJson,""" +
-        s""""full":${q(fullPath)},"sf":${q(sfDir)}}"""
-    // the first variant that fits, built lazily; the leanest otherwise
-    val summary = Iterator((true, true), (false, true))
-      .map { case (r, w) => summaryLine(r, w) }.find(_.length <= 1900)
-      .getOrElse(summaryLine(false, false))
-    if (summary.length > 1900)
+    val summary = record.summary
+    if (summary.length > SummaryLimit)
       System.err.println(s"[bench] WARNING: summary line is " +
         s"${summary.length} chars even after dropping optional fields " +
         "— the driver's 2000-char tail capture may truncate it")
     println(summary)
+  }
+
+  /** A row name's family: its prefix before the first `_`, with every
+    * `q<N>` and `e<N>` row folded into `q` and `e`. */
+  private def family(n: String): String = {
+    val p = n.takeWhile(_ != '_')
+    if (p.matches("q\\d+")) "q" else if (p.matches("e\\d*")) "e" else p
+  }
+
+  /** One swept row: its reported seconds (-1 = error, NaN = designed
+    * skip), the repeats that ran, and the hypervisor-steal fraction of
+    * the box while it ran. */
+  private[graft] final case class RowResult(name: String, sec: Double,
+      reps: Int, stealFrac: Double)
+
+  /** The co-load guard: what foreign JVMs, steal and iowait took from
+    * the box during the sweep, and whether any guard flagged it. */
+  private[graft] final case class Coload(otherJvmCpuSec: Double,
+      frac: Double, stealSec: Double, stealFrac: Double, iowaitSec: Double,
+      load1Before: Double, load1After: Double, rowsStealFlagged: Int,
+      flagged: Boolean)
+
+  /** Tail contract: the round's bench record is parsed from the last
+    * complete JSON line in the LAST 2000 chars of stdout. r15-r17 lost
+    * their bench records because recall_structured grew the summary
+    * past that (r17: 3387 chars). */
+  private[graft] val SummaryLimit = 1900
+
+  /** Json.mapper writing every double as a 3-decimal figure (locale
+    * free) and a non-finite one as null: NaN marks a designed skip. */
+  private lazy val recordMapper = {
+    val threeDecimals = new StdSerializer[java.lang.Double](classOf[java.lang.Double]) {
+      override def serialize(v: java.lang.Double, g: JsonGenerator,
+          p: SerializerProvider): Unit =
+        if (v.isNaN || v.isInfinite) g.writeNull()
+        else g.writeNumber(java.math.BigDecimal.valueOf(v.doubleValue)
+          .setScale(3, java.math.RoundingMode.HALF_UP))
+    }
+    Json.mapper.copy().registerModule(new SimpleModule()
+      .addSerializer(classOf[java.lang.Double], threeDecimals)
+      .addSerializer(java.lang.Double.TYPE, threeDecimals))
+  }
+
+  /** Everything one leg records. [[full]] is the full per-row record
+    * (written to `fullPath`); [[summary]] the compact line printed last
+    * on stdout, which keeps under [[SummaryLimit]] by dropping its
+    * optional fields: first `recall`, then `worst5`. Per-row maps live
+    * only in the full record: the row names alone pass the limit. */
+  private[graft] final case class LegRecord(rows: Seq[RowResult],
+      calibSec: Double, calibEndSec: Double,
+      calibMid: Seq[(String, Double)], calibMidLimit: Double,
+      historyTrips: Seq[(String, Double, Double)], coload: Coload,
+      recall: Seq[(String, Double)],
+      structured: Option[(String, graft.operators.AnnRecall.StructuredReport)],
+      profiles: scala.collection.Map[String, RowProfile],
+      prevQueries: Set[String], fullPath: String, sfDir: String) {
+    private val measured = rows.filter(r => !r.sec.isNaN && r.sec >= 0)
+    private val comparable = measured.filter(r => prevQueries(r.name))
+    private def byName(rs: Seq[RowResult])(f: RowResult => Any) =
+      ListMap.from(rs.map(r => r.name -> f(r)))
+    private def head = ListMap[String, Any]("metric" -> "total",
+      "value" -> measured.map(_.sec).sum, "unit" -> "sec")
+    private def tail = ListMap[String, Any](
+      "comparable_total" -> comparable.map(_.sec).sum,
+      "comparable_n" -> comparable.size)
+    private def skipped = rows.filter(_.sec.isNaN).map(_.name)
+    private def errors = rows.filter(_.sec == -1.0).map(_.name)
+
+    def full: String = recordMapper.writeValueAsString(head ++ ListMap(
+      "queries" -> byName(rows)(_.sec),
+      "reps" -> byName(rows)(_.reps),
+      // which rows a mid-sweep host event actually touched
+      "row_steal" -> byName(rows.filter(_.stealFrac > 0.05))(_.stealFrac),
+      "skipped" -> skipped, "errors" -> errors,
+      "calib_sec" -> calibSec, "calib_end_sec" -> calibEndSec,
+      "calib_mid" -> ListMap.from(calibMid),
+      "calib_mid_limit" -> calibMidLimit,
+      "history_trips" -> historyTrips.map { case (n, r, p) =>
+        ListMap("row" -> n, "ratio" -> r, "probe_sec" -> p) },
+      "coload" -> coload,
+      "recall" -> ListMap.from(recall),
+      "recall_structured" -> structured.map { case (d, r) => ListMap(
+        "dir" -> d, "legs" -> ListMap.from(r.legs),
+        "negctrl_ivfpq_trained" -> r.negControl,
+        "nlist" -> r.nlist, "nprobe_curve" -> r.curve,
+        "alt_nlist" -> r.altNlist, "alt_nprobe_curve" -> r.altCurve,
+        "ivf_nlist" -> r.ivfNlist, "ivf_nprobe_curve" -> r.ivfCurve,
+        "lsh_or_amp" -> r.orAmp, "refine_curve" -> r.refineCurve) },
+      "profile" -> profiles) ++ tail + ("sf" -> sfDir))
+
+    def summary: String = {
+      val fields = head ++ ListMap(
+        "n" -> measured.size,
+        "families" -> ListMap.from(measured.groupBy(r => family(r.name))
+          .map { case (f, rs) => f -> rs.map(_.sec).sum }.toSeq.sortBy(-_._2)),
+        "worst5" -> byName(measured.sortBy(-_.sec).take(5))(_.sec),
+        "skipped" -> skipped, "errors" -> errors,
+        "calib_sec" -> calibSec, "calib_end_sec" -> calibEndSec,
+        "calib_mid_max" -> (if (calibMid.isEmpty) 0.0 else calibMid.map(_._2).max),
+        "history_trips_n" -> historyTrips.size,
+        "coload" -> coload,
+        "recall" -> ListMap.from(recall)) ++ tail ++
+        ListMap("full" -> fullPath, "sf" -> sfDir)
+      // the first variant that fits, else the leanest
+      val drops = Seq(Nil, Seq("recall"), Seq("recall", "worst5"))
+      drops.view.map(d => recordMapper.writeValueAsString(fields -- d))
+        .find(_.length <= SummaryLimit)
+        .getOrElse(recordMapper.writeValueAsString(fields -- drops.last))
+    }
   }
 }
 
@@ -857,8 +666,7 @@ object BenchSweep {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: BenchSweep <repeats> <sfDir:outPath>...")
-    val repeats = args(0).toInt
-    require(repeats >= 1, s"repeats must be >= 1, got $repeats")
+    val repeats = Bench.parseRepeats(args(0))
     val legs = args.drop(1).toSeq.map { a =>
       val i = a.lastIndexOf(':')
       require(i > 0, s"leg must be sfDir:outPath, got $a")

@@ -1,15 +1,20 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    // optional 3rd arg (local iteration only): comma-separated name filter
+    // optional 3rd arg (local iteration only): comma-separated names;
+    // a name that is no query fails here instead of dropping silently
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+      if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
+    only.foreach { names =>
+      val unknown = names -- SparkEntry.queries.keySet
+      require(unknown.isEmpty, s"name filter '${args(2)}' names no query: " +
+        unknown.toSeq.sorted.mkString(", "))
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -59,29 +64,14 @@ object Verify {
         System.err.println(s"[verify] cache cleanup failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Completeness manifest: erroring queries leave no parquet behind,
+    def write(file: String, m: scala.collection.Map[String, String]): Unit =
+      Json.mapper.writeValue(new java.io.File(outDir, file), m)
+    write("oracle_sql.json", SparkEntry.oracleSql)
+    // Completeness manifests: erroring queries leave no parquet behind,
     // which a per-query compare silently skips — record them explicitly
     // so a loader regression is visible in the round artifacts.
-    def manifest(m: scala.collection.Map[String, String]): String = m
-      .map { case (k, v) => s"${q(k)}: ${q(v.linesIterator.take(3).mkString(" "))}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/verify_errors.json"), manifest(failed))
-    Files.writeString(Paths.get(s"$outDir/verify_skips.json"), manifest(skipped))
+    for ((file, m) <- Seq("verify_errors.json" -> failed, "verify_skips.json" -> skipped))
+      write(file, m.map { case (k, v) => k -> v.linesIterator.take(3).mkString(" ") })
     if (skipped.nonEmpty)
       System.err.println(
         s"[verify] ${skipped.size} designed-skip: ${skipped.keys.mkString(", ")}")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{BenchRow, SparkEntry, Tables}
 import graft.functions.{TopK, VectorExpressions}
 
 /** Recall@k for the approximate-nearest-neighbor legs — hash-parity
@@ -47,21 +47,10 @@ object AnnRecall {
     TopK.perQueryTopK(scored, col("d2"), K, desc = false, scoreName = "d2")
   }
 
-  /** Leg name → (metric, BENCH form) — the same form the timed sweep
-    * runs, so the recall number describes the benched index. Since r15
-    * the canonical PQ legs are the TRAINED production models (the
-    * benched defaults); the untrained SQL-replayable oracle forms are
-    * the explicit `_baseline` rows. */
-  private val legs
-      : Map[String, (String, (SparkSession, String) => DataFrame)] = Map(
-    "sim_ann_lsh" -> (("cos", AnnLsh.annTopKScaled _)),
-    "sim_ann_multiprobe" -> (("cos", AnnLsh.annMultiProbeScaled _)),
-    "sim_ann_ivf" -> (("cos", AnnIvf.annIvfQuery _)),
-    "sim_pq_adc_topk" -> (("l2", AnnPq.pqAdcTopKTrained _)),
-    "sim_pq_adc_baseline" -> (("l2", AnnPq.pqAdcTopK _)),
-    "sim_ivfpq_topk" -> (("l2", AnnIvfPq.ivfPqTopKTrained _)),
-    "sim_ivfpq_refine" -> (("l2", AnnIvfPq.ivfPqRefineTopKTrained _)),
-    "sim_ivfpq_baseline" -> (("l2", AnnIvfPq.ivfPqTopK _)))
+  /** The bench rows with a recall metric, scored in their bench form
+    * so the recall number describes the benched index. */
+  private def legs: Seq[BenchRow] =
+    SparkEntry.benchRows.filter(_.recall.isDefined)
 
   private def meanRecall(base: Map[Long, Set[Long]],
       approx: Map[Long, Set[Long]]): Double = {
@@ -76,31 +65,29 @@ object AnnRecall {
     * computes each exact scan at most once no matter how many legs and
     * curves consume it. A leg that errors reports -1 rather than
     * aborting the rest. */
-  private def legRecalls(s: SparkSession, dir: String, names: Set[String],
+  private def legRecalls(s: SparkSession, dir: String, rows: Seq[BenchRow],
       cosSets: () => Map[Long, Set[Long]],
-      l2Sets: () => Map[Long, Set[Long]]): Seq[(String, Double)] = {
-    val wanted = legs.filter(kv => names(kv._1))
-    wanted.toSeq.sortBy(_._1).map { case (name, (metric, fn)) =>
+      l2Sets: () => Map[Long, Set[Long]]): Seq[(String, Double)] =
+    rows.map { row =>
       val r =
         try {
-          val base = if (metric == "cos") cosSets() else l2Sets()
-          meanRecall(base, topSets(fn(s, dir)))
+          val base = if (row.recall.contains("cos")) cosSets() else l2Sets()
+          meanRecall(base, topSets(row.timed(s, dir)))
         } catch { case e: Throwable =>
-          System.err.println(s"[recall] $name failed: $e"); -1.0
+          System.err.println(s"[recall] ${row.name} failed: $e"); -1.0
         }
-      name -> r
+      row.name -> r
     }
-  }
 
   /** Mean recall@5 per requested leg (legs not in `names` are
     * skipped, and a baseline is only computed if a selected leg needs
     * it). */
   def recallAtK(s: SparkSession, dir: String,
       names: Set[String]): Seq[(String, Double)] = {
-    if (!legs.keySet.exists(names)) return Seq.empty
+    val wanted = legs.filter(r => names(r.name))
     lazy val cosSets = topSets(SimilarityQueries.cosineTopK(s, dir))
     lazy val l2Sets = topSets(exactGridL2(s, dir))
-    legRecalls(s, dir, names, () => cosSets, () => l2Sets)
+    legRecalls(s, dir, wanted, () => cosSets, () => l2Sets)
   }
 
   /** One curve point: probe breadth, the corpus fraction it scans,
@@ -210,7 +197,7 @@ object AnnRecall {
     lazy val cosSets = topSets(SimilarityQueries.cosineTopK(s, dir))
     lazy val l2Sets = topSets(exactGridL2(s, dir))
     val legRecallSeq =
-      legRecalls(s, dir, legs.keySet, () => cosSets, () => l2Sets)
+      legRecalls(s, dir, legs, () => cosSets, () => l2Sets)
     val neg =
       try meanRecall(l2Sets, topSets(AnnIvfPq.ivfPqTopKMistrained(s, dir)))
       catch { case e: Throwable =>

@@ -455,14 +455,13 @@ object TextQueries {
     * first (map-side partial aggs); the score pass joins corpus
     * bigram occurrences to the bigram-count table co-partitioned on
     * the bigram key — one sort-merge join that scales linearly. At
-    * 100 TB set `spark.graft.lm.topK` (e.g. 262144): the model state
+    * 100 TB pass `topK` (e.g. 262144): the model state
     * caps at K bigrams + K unigrams, both BROADCAST, tail bigrams
     * back off to the smoothed zero-count estimate from the unigram
     * table — scoring becomes map-only up to the final per-doc sum
-    * (the standard KenLM/CCNet pruned-model shape). Default 0 keeps
-    * the exact full-table join (the oracle form). */
-  def lmPerplexity(s: SparkSession, dir: String): DataFrame = {
-    val topK = s.conf.getOption("spark.graft.lm.topK").map(_.toInt).getOrElse(0)
+    * (the standard KenLM/CCNet pruned-model shape). `topK` <= 0 (the
+    * default) keeps the exact full-table join (the oracle form). */
+  def lmPerplexity(s: SparkSession, dir: String, topK: Int = 0): DataFrame = {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
     // bigram occurrences keyed by the space-joined gram "w1 w2"
@@ -608,13 +607,12 @@ object TextQueries {
     * Scale: the corpus collapses to the word-count table first
     * (map-side partial aggs); scoring joins the token stream to that
     * table on the word key — linear, one co-partitioned join, same
-    * shape as [[lmPerplexity]]. At 100 TB set `spark.graft.nb.topK`:
+    * shape as [[lmPerplexity]]. At 100 TB pass `topK`:
     * the weight table is top-K-pruned (rare words carry ≈0 evidence
     * under add-1 smoothing) and broadcast, tail words take the
-    * zero-count backoff weight. Default 0 = exact full-vocab join
-    * (the oracle form). */
-  def qualityClassifier(s: SparkSession, dir: String): DataFrame = {
-    val topK = s.conf.getOption("spark.graft.nb.topK").map(_.toInt).getOrElse(0)
+    * zero-count backoff weight. `topK` <= 0 (the default) = exact
+    * full-vocab join (the oracle form). */
+  def qualityClassifier(s: SparkSession, dir: String, topK: Int = 0): DataFrame = {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"),
         (substring(col("source"), 4, 10).cast("int") % 5 === 0).as("tgt"),
@@ -637,7 +635,7 @@ object TextQueries {
          log((co.cast("double") + 1.0) /
             (col("no") + col("v")).cast("double"))))
     if (topK > 0) {
-      // Scale path (`spark.graft.nb.topK` > 0): keep the K
+      // Scale path (`topK` > 0): keep the K
       // highest-evidence words (by total count — under add-1
       // smoothing, tail words carry ≈0 log-odds), collect the
       // K-bounded weight table as model state, broadcast it, and
@@ -760,9 +758,9 @@ object TextQueries {
       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t_quality_classifier" -> (qualityClassifier _),
+    "t_quality_classifier" -> ((s, d) => qualityClassifier(s, d)),
     "t_gopher_ngram" -> (gopherNgram _),
-    "t_lm_perplexity" -> (lmPerplexity _),
+    "t_lm_perplexity" -> ((s, d) => lmPerplexity(s, d)),
     "t_tfidf_topk" -> (tfidfTopK _),
     "t_token_count_bpe" -> (tokenCountBpe _),
     "t_token_stats" -> (tokenStats _),

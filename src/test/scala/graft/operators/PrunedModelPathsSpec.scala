@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 
-/** The conf-gated 100 TB scale paths of the corpus-model text
+/** The `topK`-gated 100 TB scale paths of the corpus-model text
   * operators (top-K-pruned model tables + backoff, broadcast scoring).
   * Two contracts: (1) when K covers the whole corpus the pruned path
   * is bit-identical to the exact oracle form; (2) when K caps the
@@ -15,9 +15,6 @@ class PrunedModelPathsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def withConf[T](key: String, value: String)(body: => T): T =
-    graft.SparkTestUtil.withConf(spark, key, value)(body)
-
   private def shuffleJoinCount(df: org.apache.spark.sql.DataFrame): Int = {
     df.collect() // materialize the AQE final plan
     val p = df.queryExecution.executedPlan.toString
@@ -26,46 +23,37 @@ class PrunedModelPathsSpec extends AnyFunSuite {
   }
 
   test("lm pruned path == exact form when topK covers the corpus") {
-    val pruned = withConf("spark.graft.lm.topK", "10000000") {
-      TextQueries.lmPerplexity(spark, dir).collect()
-    }
+    val pruned = TextQueries.lmPerplexity(spark, dir, topK = 10000000).collect()
     val exact = TextQueries.lmPerplexity(spark, dir).collect()
     assert(pruned.toSeq === exact.toSeq)
   }
 
   test("nb pruned path == exact form when topK covers the corpus") {
-    val pruned = withConf("spark.graft.nb.topK", "10000000") {
-      TextQueries.qualityClassifier(spark, dir).collect()
-    }
+    val pruned =
+      TextQueries.qualityClassifier(spark, dir, topK = 10000000).collect()
     val exact = TextQueries.qualityClassifier(spark, dir).collect()
     assert(pruned.toSeq === exact.toSeq)
   }
 
   test("capped-K lm scoring uses only broadcast joins and stays total") {
-    withConf("spark.graft.lm.topK", "64") {
-      val df = TextQueries.lmPerplexity(spark, dir)
-      assert(shuffleJoinCount(df) === 0,
-        "pruned scoring must not shuffle-join")
-      val rows = df.collect()
-      // every document still scored (backoff covers tail bigrams)
-      assert(rows.length ===
-        withConf("spark.graft.lm.topK", "-1")(
-          TextQueries.lmPerplexity(spark, dir).collect().length))
-      assert(rows.forall(r =>
-        !r.getAs[Double]("avg_logp").isNaN &&
-          !r.getAs[Double]("avg_logp").isInfinite))
-    }
+    val df = TextQueries.lmPerplexity(spark, dir, topK = 64)
+    assert(shuffleJoinCount(df) === 0,
+      "pruned scoring must not shuffle-join")
+    val rows = df.collect()
+    // every document still scored (backoff covers tail bigrams)
+    assert(rows.length ===
+      TextQueries.lmPerplexity(spark, dir, topK = -1).collect().length)
+    assert(rows.forall(r =>
+      !r.getAs[Double]("avg_logp").isNaN &&
+        !r.getAs[Double]("avg_logp").isInfinite))
   }
 
   test("capped-K nb scoring uses only broadcast joins and stays total") {
-    withConf("spark.graft.nb.topK", "64") {
-      val df = TextQueries.qualityClassifier(spark, dir)
-      assert(shuffleJoinCount(df) === 0,
-        "pruned scoring must not shuffle-join")
-      val rows = df.collect()
-      assert(rows.length ===
-        withConf("spark.graft.nb.topK", "-1")(
-          TextQueries.qualityClassifier(spark, dir).collect().length))
-    }
+    val df = TextQueries.qualityClassifier(spark, dir, topK = 64)
+    assert(shuffleJoinCount(df) === 0,
+      "pruned scoring must not shuffle-join")
+    val rows = df.collect()
+    assert(rows.length ===
+      TextQueries.qualityClassifier(spark, dir, topK = -1).collect().length)
   }
 }

@@ -38,7 +38,7 @@ done
 LOG="$(mktemp /tmp/tripwire_demo_log.XXXX)"
 
 # repeats=2 so the per-repeat stderr lines exist as spinner triggers
-# (heavyConstruction rows still run exactly one repeat by contract)
+# (memoized bench rows still run exactly one repeat by contract)
 SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_BENCH_FULL="$OUT" \
 SPARK_GRAFT_RECALL=off \
 java $OPENS -Xms16g -Xmx16g -XX:+AlwaysPreTouch \
