@@ -1,6 +1,12 @@
 package graft.controlplane
 
-import graft.streaming.Metrics.ProgressCollector
+import scala.util.control.NonFatal
+
+import graft.streaming.Metrics.{BatchProgress, ProgressCollector}
+
+/** A controller's exception on one batch's progress, kept by
+  * [[ControlLoop]] instead of thrown into the ticking thread. */
+final case class ControlFailure(batchId: Long, error: Throwable)
 
 /** The closed control loop: per-batch metrics (from the `observe()`
   * channel) feed a [[Controller]], whose decisions drive the
@@ -13,7 +19,9 @@ import graft.streaming.Metrics.ProgressCollector
   * controller; reconfigurations apply between micro-batches (the
   * executor's sync barrier), so the loop is safe to run from any
   * driver-side cadence (a timer thread, or after processAllAvailable
-  * in tests).
+  * in tests). A controller that throws does not end the loop: the
+  * exception is kept in [[failures]] and the tick goes on with the
+  * next record.
   */
 final class ControlLoop(
     executor: ReconfigurationExecutor,
@@ -22,6 +30,7 @@ final class ControlLoop(
 
   private var consumed = 0
   private val reportsBuf = List.newBuilder[ReconfigReport]
+  private val failuresBuf = List.newBuilder[ControlFailure]
 
   /** Offer unseen batch metrics to the controller; returns any
     * reconfiguration applied during this tick.
@@ -39,16 +48,20 @@ final class ControlLoop(
     offer(fresh)
   }
 
-  private[controlplane] def offer(
-      fresh: List[graft.streaming.Metrics.BatchProgress])
+  private[controlplane] def offer(fresh: List[BatchProgress])
       : Option[ReconfigReport] = {
     var applied: Option[ReconfigReport] = None
     val it = fresh.iterator
-    while (applied.isEmpty && it.hasNext)
-      applied = controller.onProgress(executor, it.next())
+    while (applied.isEmpty && it.hasNext) {
+      val p = it.next()
+      try applied = controller.onProgress(executor, p)
+      catch { case NonFatal(e) => failuresBuf += ControlFailure(p.batchId, e) }
+    }
     applied.foreach(reportsBuf += _)
     applied
   }
 
   def reports: List[ReconfigReport] = reportsBuf.result()
+
+  def failures: List[ControlFailure] = failuresBuf.result()
 }

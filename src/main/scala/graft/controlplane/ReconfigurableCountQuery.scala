@@ -1,5 +1,8 @@
 package graft.controlplane
 
+import java.util.concurrent.TimeUnit
+
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
@@ -7,7 +10,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.functions.GraftFunctions
 import graft.model.KeyedTuple
-import graft.streaming.Metrics
+import graft.streaming.{LocalCheckpointFileManager, Metrics}
 import graft.streaming.Metrics.ReconfigProfiler
 
 /** State of the reconfigurable running-count operator. `payload` is
@@ -183,10 +186,11 @@ final class ReconfigurableCountQuery(
   // restarted at a hardcoded 0 would silently resume the STALE gen0
   // checkpoint while stamping sink rows generation=0 — readFileSink
   // would then prefer the dead instance's higher-generation rows.
+  private val checkpointFs = new Path(checkpointRoot)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   private var generation = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(checkpointRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (root, fs) = (new Path(checkpointRoot), checkpointFs)
     if (!fs.exists(root)) 0
     else fs.listStatus(root).filter(_.isDirectory)
       .map(_.getPath.getName)
@@ -195,6 +199,8 @@ final class ReconfigurableCountQuery(
       .foldLeft(0)(math.max)
   }
   private var query: StreamingQuery = _
+  /** The last batch committed in the checkpoint when `query` started. */
+  private var committedAtStart = -1L
   private var initState: Option[Dataset[(String, CountState)]] = None
   val profiler = new ReconfigProfiler
 
@@ -251,24 +257,48 @@ final class ReconfigurableCountQuery(
     * next generation, observable through [[PlacementObserver]]). */
   def start(): Unit = ReconfigurableCountQuery.startLock.synchronized {
     val desc = plan.operators(OperatorName)
-    // pinned state layout (Flink keygroup model) or legacy follow-the-
-    // parallelism; the routed map stage always uses parallelism.
-    // shuffle.partitions is SESSION-scoped and read when the stream
-    // materializes at writeStream.start() — two pipelines sharing one
-    // session could otherwise interleave set→start windows and bucket
-    // one pipeline's state under the other's partition count, so the
-    // whole conf-set→start sequence is serialized JVM-wide.
+    // Two SESSION-scoped confs are read when the stream materializes at
+    // writeStream.start(), so the whole set→start→restore window is
+    // serialized JVM-wide: two pipelines sharing one session could
+    // otherwise interleave windows and, say, bucket one pipeline's
+    // state under the other's partition count.
+    //  - shuffle.partitions: the pinned state layout (Flink keygroup
+    //    model) or legacy follow-the-parallelism; the routed map stage
+    //    always uses parallelism.
+    //  - the checkpoint file manager, on a local checkpoint root whose
+    //    caller has not chosen one: WAL entries and state-store files
+    //    commit without a child process (see LocalCheckpointFileManager).
     // StreamExecution clones the session when start() builds it, so
-    // the running query keeps the value and the caller's key is
-    // restored right after — unset again when it was unset: getAll
-    // holds only the explicitly set keys, where get() reports a
-    // default as if it had been set.
-    val partitionsKey = "spark.sql.shuffle.partitions"
-    val callerPartitions = spark.conf.getAll.get(partitionsKey)
-    spark.conf.set(partitionsKey, statePartitions.getOrElse(desc.parallelism))
-    try query = startQuery(desc)
-    finally callerPartitions.fold(spark.conf.unset(partitionsKey))(
-      spark.conf.set(partitionsKey, _))
+    // the running query (its driver-side WAL and the executors' state
+    // commits) keeps the values and the caller's keys are restored
+    // right after.
+    val confs = Map("spark.sql.shuffle.partitions" ->
+      statePartitions.getOrElse(desc.parallelism).toString) ++
+      (if (!installFileManager) Map.empty
+       else Map(FileManagerKey -> classOf[LocalCheckpointFileManager].getName))
+    committedAtStart = lastCommitted
+    query = withSessionConfs(confs)(startQuery(desc))
+  }
+
+  private val FileManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Whether [[start]] installs [[LocalCheckpointFileManager]]: only
+    * for a checkpoint root on the local checksummed file system, and
+    * never over a manager the caller chose. */
+  private def installFileManager: Boolean =
+    spark.conf.getOption(FileManagerKey).isEmpty &&
+      checkpointFs.isInstanceOf[LocalFileSystem]
+
+  /** Run `f` with `confs` set in the caller's session, then put each
+    * key back as it was: unset again when it was unset (getAll holds
+    * only the explicitly set keys, where get() reports a default as if
+    * it had been set). */
+  private def withSessionConfs[T](confs: Map[String, String])(f: => T): T = {
+    val before = spark.conf.getAll
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally confs.keys.foreach(k =>
+      before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)))
   }
 
   private def startQuery(desc: OperatorDescriptor): StreamingQuery = {
@@ -332,7 +362,33 @@ final class ReconfigurableCountQuery(
 
   def processAllAvailable(): Unit = query.processAllAvailable()
 
-  def stop(): Unit = if (query != null) query.stop()
+  def stop(): Unit = if (query != null) {
+    // StreamingQuery.stop() interrupts the stream thread, and an
+    // interrupt between a batch's commits/N entry and its progress
+    // event ends the run with the batch done but never reported: the
+    // controllers' metrics and every listener miss it. So no WAL entry
+    // may commit from here on (LocalCheckpointFileManager.holdCommits;
+    // a writer waiting on the hold gives up once stop() has begun), and
+    // a batch that already committed is given the moment it needs to
+    // report (milliseconds; the deadline only bounds a stuck query).
+    val (q, dir) = (query, checkpointFs.makeQualified(new Path(checkpointDir(generation))))
+    LocalCheckpointFileManager.holdCommits(dir, () => !q.isActive) {
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(10)
+      def reported = Option(q.lastProgress).fold(committedAtStart)(_.batchId)
+      while (q.isActive && lastCommitted > reported && System.nanoTime() < deadline)
+        Thread.sleep(1)
+      q.stop()
+    }
+  }
+
+  /** The highest batch id in the current generation's commit log, or -1. */
+  private def lastCommitted: Long = {
+    val commits = new Path(checkpointDir(generation), "commits")
+    if (!checkpointFs.exists(commits)) -1L
+    else checkpointFs.listStatus(commits).map(_.getPath.getName)
+      .collect { case n if n.nonEmpty && n.forall(_.isDigit) => n.toLong }
+      .foldLeft(-1L)(math.max)
+  }
 
   /** Read the running count state out of a checkpoint with the batch
     * `statestore` reader (key-group state migration, Spark-native). */
@@ -383,7 +439,7 @@ final class ReconfigurableCountQuery(
     }
     profiler.time("synchronize") {
       if (drainOnSync) query.processAllAvailable() // drain = sync barrier
-      query.stop()
+      stop()
     }
     if (!routingOnly) {
       profiler.time("updateState") {

@@ -75,4 +75,41 @@ class ControlLoopSpec extends AnyFunSuite {
         s"remap did not move any keygroup (observed ${common.size})")
     } finally spark.streams.removeListener(collector)
   }
+
+  test("a controller that throws is recorded and the next tick still reconfigures") {
+    // an executor that only records what it applies: the loop, not the
+    // pipeline, is under test
+    val ex = new ReconfigurationExecutor {
+      var plan = QueryPlanDescriptor(128, Map("op" ->
+        OperatorDescriptor.contiguous("op", 2, "countV1", 128)))
+      def getPlan: QueryPlanDescriptor = plan
+      def assignExecutionLogic(o: String, u: String): Unit = ()
+      def assignResources(o: String, p: Int): Unit =
+        plan = plan.withOperator(OperatorDescriptor.contiguous(o, p, "countV1", 128))
+      def assignWorkload(o: String, a: Vector[Int]): Unit = ()
+      def execute(reason: String): ReconfigReport =
+        ReconfigReport(reason, Map.empty, plan, plan)
+    }
+    var calls = 0
+    val flaky = new Controller {
+      val name = "flaky"
+      def onBatch(e: ReconfigurationExecutor, batchId: Long,
+          rows: Map[Int, Long]): Option[ReconfigReport] = {
+        calls += 1
+        if (calls == 1) throw new IllegalStateException("controller bug")
+        e.assignResources("op", 4)
+        Some(e.execute(s"scale-out at batch $batchId"))
+      }
+    }
+    val loop = new ControlLoop(ex, flaky, new Metrics.ProgressCollector)
+    def batch(id: Long) = Metrics.BatchProgress(id, 10, 10.0, 100)
+    assert(loop.offer(List(batch(0))).isEmpty)
+    assert(loop.failures.map(f => (f.batchId, f.error.getMessage)) ===
+      List((0L, "controller bug")))
+    val next = loop.offer(List(batch(1)))
+    assert(next.map(_.reason) === Some("scale-out at batch 1"))
+    assert(ex.getPlan.operators("op").parallelism === 4)
+    assert(loop.reports === next.toList)
+    assert(loop.failures.size === 1)
+  }
 }

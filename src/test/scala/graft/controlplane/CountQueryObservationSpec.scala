@@ -2,6 +2,8 @@ package graft.controlplane
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -84,5 +86,56 @@ class CountQueryObservationSpec extends AnyFunSuite {
     val counts = ReconfigurableCountQuery.readFileSink(session, rq.sinkDir)
       .collect().map(t => t.key -> t.value).toMap
     assert(counts === (0 until 10).map(k => s"A$k" -> 2L).toMap)
+  }
+
+  private val FileManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Start a pipeline on a fresh session, feed it one batch, and return
+    * the file manager its running query's cloned session holds, with
+    * the caller's confs before and after. */
+  private def runWithManager(callerManager: Option[String])
+      : (Option[String], Map[String, String], Map[String, String], java.nio.file.Path) = {
+    val session = spark.newSession()
+    import session.implicits._
+    implicit val sql = session.sqlContext
+    callerManager.foreach(session.conf.set(FileManagerKey, _))
+    val before = session.conf.getAll
+    val stream = MemoryStream[KeyedTuple]
+    val root = Files.createTempDirectory("ckpt-fm")
+    val rq = new ReconfigurableCountQuery(session, () => stream.toDS(),
+      root.toString, "ckpt_fm_sink")
+    try {
+      rq.start()
+      stream.addData((0 until 10).map(k => KeyedTuple(s"A$k", 1L)): _*)
+      rq.processAllAvailable()
+      // the session the running query cloned for itself, as its last
+      // micro-batch planned with it
+      val running = session.streams.active.head
+        .asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.sparkSession.conf.getOption(FileManagerKey)
+      (running, before, session.conf.getAll, root)
+    } finally rq.stop()
+  }
+
+  test("a local checkpoint root commits through LocalCheckpointFileManager") {
+    val (running, before, after, root) = runWithManager(None)
+    assert(running === Some(classOf[graft.streaming.LocalCheckpointFileManager].getName))
+    assert(after === before)
+    assert(!after.contains(FileManagerKey))
+    // the WAL and the state store committed batch 0 with no temp name left
+    assert(Files.exists(root.resolve("gen0/commits/0")))
+    assert(Files.exists(root.resolve("gen0/state/0/0/1.delta")))
+    val leftovers = Files.walk(root).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".tmp")).toList
+    assert(leftovers.isEmpty, leftovers)
+  }
+
+  test("a checkpoint file manager the caller set is used unchanged and left as found") {
+    val theirs = classOf[org.apache.spark.sql.execution.streaming.checkpointing
+      .FileSystemBasedCheckpointFileManager].getName
+    val (running, before, after, _) = runWithManager(Some(theirs))
+    assert(running === Some(theirs))
+    assert(after === before)
+    assert(after.get(FileManagerKey) === Some(theirs))
   }
 }
