@@ -1,6 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 
 /** Typed loaders for the driver-generated test tables (TESTDATA.md).
@@ -15,7 +21,33 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    open(spark, s"$dir/$name.parquet")
+
+  /** Open one parquet path. An existing regular file's schema is read
+    * from its footer on the driver and handed to the reader, so opening
+    * it runs no Spark job (`spark.read.parquet` runs a one-task job to
+    * read that same footer). Anything else (a directory, a glob, a
+    * missing or unreadable file) goes to `spark.read.parquet` unchanged,
+    * errors included. No schema is kept: each call reads the footer as
+    * the file stands now. */
+  def open(spark: SparkSession, path: String): DataFrame =
+    open(spark, path, footer(spark, path))
+
+  private def open(spark: SparkSession, path: String,
+      footer: Option[Footer]): DataFrame =
+    footer.flatMap(f => Try(GraftSqlBridge.parquetSchema(spark, f)).toOption) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The footer of `path` when it names an existing regular file. */
+  private def footer(spark: SparkSession, path: String): Option[Footer] =
+    if (path.exists("{}[]*?\\".contains(_))) None
+    else Try {
+      val p = new Path(path)
+      val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+      if (st.isFile) Some(GraftSqlBridge.parquetFooter(spark, st)) else None
+    }.toOption.flatten
 
   /** Construction-time memo for the few queries that need a
     * driver-side scan while BUILDING the plan (LSH width gate,
@@ -104,9 +136,33 @@ object Tables {
     * sessions run UTC, so the instant is unchanged) because streaming
     * watermarks and the unix_micros-family functions require TIMESTAMP.
     * Branch on the loaded type so either vintage of the file works. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    tsShim(load(s, d, "events"))
+  def events(s: SparkSession, d: String): DataFrame =
+    tsShim(openEvents(s, s"$d/events.parquet"))
+
+  /** The events file as stored, before [[tsShim]]. Only the old
+    * vintage needs `spark.sql.legacy.parquet.nanosAsLong`, for its
+    * schema and again when its scan runs, so the conf is set in the
+    * session only when the footer stores `ts` as INT64 TIMESTAMP(NANOS),
+    * or when there is no single footer to tell (a directory); a
+    * current-vintage file leaves the session's conf as it was. */
+  def openEvents(s: SparkSession, path: String): DataFrame = {
+    val f = footer(s, path)
+    if (f.forall(storesNanos(_, "ts")))
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    open(s, path, f)
+  }
+
+  private def storesNanos(f: Footer, column: String): Boolean = {
+    val schema = f.getParquetMetadata.getFileMetaData.getSchema
+    schema.containsField(column) && {
+      val t = schema.getType(schema.getFieldIndex(column))
+      t.isPrimitive &&
+        t.asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT64 &&
+        (t.getLogicalTypeAnnotation match {
+          case ts: TimestampLogicalTypeAnnotation => ts.getUnit == TimeUnit.NANOS
+          case _ => false
+        })
+    }
   }
 
   /** The vintage shim itself, shared by the batch loader above and the

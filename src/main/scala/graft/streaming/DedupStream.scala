@@ -19,14 +19,14 @@ object DedupStream {
 
   /** File-replay stream of the documents table (staged via
     * [[ReplayStaging]], cleaned up at JVM shutdown). The streaming
-    * schema comes from a batch peek at the file — the same
+    * schema comes from the file's footer (`Tables.open`) — the same
     * vintage-adaptive pattern as [[EventStream.readStream]] — rather
     * than a hand-written StructType that would silently drift from
     * the generator (exactly how the events.ts vintage change broke
     * r7's hardcoded shim). */
   def readDocuments(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
-      .schema(spark.read.parquet(s"$dir/documents.parquet").schema)
+      .schema(graft.Tables.open(spark, s"$dir/documents.parquet").schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(ReplayStaging.stage(s"$dir/documents.parquet"))
 

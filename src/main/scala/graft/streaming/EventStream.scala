@@ -16,13 +16,13 @@ object EventStream {
     * analog of the reference's SSERealRateSourceFunction file replay,
     * stock/sources/SSERealRateSourceFunctionKV.java:14-100).
     *
-    * Schema-adaptive like Tables.events: a batch peek at the file
-    * supplies the streaming schema, and the ns→µs shim is applied only
-    * when the file's `ts` loads as long (old TIMESTAMP(NANOS)
-    * testdata); current timestamp[us] files stream through untouched. */
+    * Schema-adaptive like Tables.events: the file's footer supplies the
+    * streaming schema (`Tables.openEvents`, no Spark job), and the ns→µs
+    * shim is applied only when the file's `ts` loads as long (old
+    * TIMESTAMP(NANOS) testdata); current timestamp[us] files stream
+    * through untouched. */
   def readStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$dir/events.parquet").schema
+    val fileSchema = graft.Tables.openEvents(spark, s"$dir/events.parquet").schema
     val raw = spark.readStream
       .schema(fileSchema)
       .option("maxFilesPerTrigger", "1")
